@@ -1,7 +1,5 @@
 package graftbench
 
-import java.nio.charset.StandardCharsets.UTF_8
-
 /**
  * Seeded input generators. They live in the benchmark on purpose: the
  * workload must not change when the engine changes, so nothing here calls
@@ -370,19 +368,5 @@ object Gen {
       Kql("ts_window", "kind : http", Seq("kind"), m => str(m, "kind") == "http",
         tsLo = Some(lo), tsHi = Some(lo + span)),
       Kql("pruned_schema", "nosuchfield : 1", Seq("nosuchfield"), _ => true))
-  }
-
-  // ---- input fingerprint ---------------------------------------------------
-
-  /** 64-bit FNV-1a over the UTF-8 bytes of every string, in order. */
-  def fingerprint(parts: Iterator[String]): String = {
-    var h = 0xcbf29ce484222325L
-    parts.foreach { s =>
-      val bs = (if (s == null) "\u0000" else s).getBytes(UTF_8)
-      var i = 0
-      while (i < bs.length) { h = (h ^ (bs(i) & 0xff)) * 0x100000001b3L; i += 1 }
-      h = (h ^ 0x1f) * 0x100000001b3L
-    }
-    f"$h%016x"
   }
 }

@@ -55,9 +55,7 @@ object JsonWorkload {
       timeMs(writeJsonl(ctx, ctx.seed, Records, jsonlDir))._2 / 1000)
     ctx.metric("setup_s", Stats.median(setupS), "s")
     val recs = Gen.records(ctx.seed, Records) // the oracle's copy, outside setup
-    ctx.fact("input_rows", recs.length.toString)
-    ctx.fact("input_hash", Gen.fingerprint(recs.iterator.map(_.line)))
-    ctx.note(s"input: ${recs.length} records, fingerprint ${ctx.factOf("input_hash")}")
+    ctx.fingerprint(ctx.spark.read.text(jsonlDir), "records")
     val rawBytes = recs.iterator.map(_.line.getBytes(UTF_8).length + 1L).sum
     val kqls = Gen.kqls(ctx.seed, recs.head.tsMs, recs.last.tsMs)
     ctx.fact("kql", kqls.map(_.text).mkString(" | "))

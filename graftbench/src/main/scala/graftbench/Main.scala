@@ -6,7 +6,8 @@ import java.nio.file.{Files, Paths}
 import scala.collection.mutable
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{bit_xor, col, count, lit, xxhash64}
 
 /**
  * Benchmark entry point: one process, one closed-loop client, `local[nproc]`.
@@ -105,7 +106,6 @@ final class Ctx(val spark: SparkSession, val cores: Int, val work: String, val s
   def metric(name: String, value: Double, unit: String): Unit = metrics(name) = (value, unit)
   def metricOf(name: String): Double = metrics(name)._1
   def fact(k: String, v: String): Unit = facts(k) = v
-  def factOf(k: String): String = facts(k)
   def note(line: String): Unit = notes += line
 
   private val t0 = System.nanoTime()
@@ -124,6 +124,15 @@ final class Ctx(val spark: SparkSession, val cores: Int, val work: String, val s
   def wrong(what: String, detail: String): Unit = {
     failed += 1
     System.err.println(s"WRONG $what: $detail")
+  }
+
+  /** Records the input fingerprint: rows plus an order-independent hash of
+    * their content. */
+  def fingerprint(input: DataFrame, what: String): Unit = {
+    val r = input.agg(count(lit(1)), bit_xor(xxhash64(input.columns.map(col).toIndexedSeq: _*))).head()
+    fact("input_rows", r.getLong(0).toString)
+    fact("input_hash", f"${r.getLong(1)}%016x")
+    note(s"input: ${r.getLong(0)} $what, fingerprint ${facts("input_hash")}")
   }
 
   /** Median and tail of one sample set of operation latencies. */

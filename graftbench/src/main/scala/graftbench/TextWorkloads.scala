@@ -53,16 +53,11 @@ object TextWorkloads {
     Gen.lookupRows.toDF("role", "tool", "team", "cost_class")
   }
 
-  /** Records the input fingerprint (rows plus an order-independent content
-    * hash) and returns the raw text bytes. */
+  /** Records the input fingerprint and returns the raw text bytes. */
   private def fingerprint(ctx: Ctx, turnsDir: String): Long = {
-    val r = ctx.spark.read.parquet(turnsDir)
-      .agg(count(lit(1)), bit_xor(xxhash64(col("conv_id"), col("turn_idx"), col("role"),
-        col("text"), col("tool"), col("ts"))), sum(octet_length(col("text")))).head()
-    ctx.fact("input_rows", r.getLong(0).toString)
-    ctx.fact("input_hash", f"${r.getLong(1)}%016x")
-    ctx.note(s"input: ${r.getLong(0)} turns, fingerprint ${ctx.factOf("input_hash")}")
-    r.getLong(2)
+    val turns = ctx.spark.read.parquet(turnsDir)
+    ctx.fingerprint(turns, "turns")
+    turns.agg(sum(octet_length(col("text")))).head().getLong(0)
   }
 
   /** One file per sink: more only pay off at millions of rows per sink. */
