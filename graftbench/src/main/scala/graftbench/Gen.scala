@@ -168,53 +168,46 @@ object Gen {
     "exact_dict", "int_var", "mid_wildcard", "case_insensitive", "ts_range",
     "pruned_empty", "forced_verify", "count_by_time")
 
-  /** `perClass` queries of each class over a corpus spanning [tsMin, tsMax]. */
-  def queries(seed: Long, perClass: Int, tsMin: Long, tsMax: Long): IndexedSeq[Query] = {
+  /** Two queries of each class over `turns`, the generated corpus the
+    * archive holds. Tokens come from the value domains above; a query that
+    * must hit takes its token from a turn that holds it, so every seed
+    * issues the same kinds of query. */
+  def queries(seed: Long, turns: IndexedSeq[Turn]): IndexedSeq[Query] = {
     val r = new Rng(seed * 31 + 7)
+    val tsMin = turns.head.tsMs
+    val tsMax = turns.last.tsMs
     def window(frac: Double): (Long, Long) = {
       val span = ((tsMax - tsMin) * frac).toLong
       val lo = tsMin + (r.double() * (tsMax - tsMin - span)).toLong
       (lo, lo + span)
     }
-    def one(cls: String, k: Int): Query = cls match {
-      case "exact_dict" => Vector(
-        Query(cls, s"*session ${id(r.int(IdSpace))} renewed*"),
-        Query(cls, s"*checksum ${id(r.int(IdSpace))} verified*"),
-        Query(cls, s"*credited to account ${id(r.int(IdSpace))}"))(k % 3)
-      case "int_var" => Vector(
-        Query(cls, s"*status=${r.pick(Codes)} *"),
-        Query(cls, s"*retry=${r.int(500)}"),
-        Query(cls, s"*on core ${r.int(500)} *"))(k % 3)
-      case "mid_wildcard" => Vector(
-        Query(cls, s"*for user_${1 + r.int(9)}?${r.int(10)} from*"),
-        Query(cls, s"*from 10.${r.int(4)}.*.${r.int(256)} retry*"),
-        Query(cls, s"*lang_${1 + r.int(9)}?${r.int(10)} to*"))(k % 3)
-      case "case_insensitive" => Vector(
-        Query(cls, s"*CONNECTION ERROR * FROM 10.${r.int(4)}.*", caseSensitive = false),
-        Query(cls, "*Gc Pause * HEAP=*", caseSensitive = false),
-        Query(cls, s"*LOGIN ${r.pick(Words).toUpperCase} FOR*", caseSensitive = false))(k % 3)
-      case "ts_range" =>
-        val (lo, hi) = window(0.1)
-        Vector(
-          Query(cls, s"*status=${r.pick(Words)}*", tsLo = Some(lo), tsHi = Some(hi)),
-          Query(cls, "*connection error*", tsLo = Some(lo), tsHi = Some(hi)),
-          Query(cls, s"*status=${r.pick(Codes)} *", tsLo = Some(lo), tsHi = Some(hi)))(k % 3)
-      case "pruned_empty" => Vector(
-        Query(cls, s"*session ${absentId(r.int(IdSpace))} renewed*"),
-        Query(cls, "*gc pause*", tsLo = Some(tsMax + 86400000L),
-          tsHi = Some(tsMax + 2 * 86400000L)),
-        Query(cls, s"*credited to account ${absentId(r.int(IdSpace))}"))(k % 3)
-      case "forced_verify" => Vector(
-        Query(cls, s"*10.${r.int(4)}.1?.${r.int(256)}*"),
-        Query(cls, s"*a0${r.int(10)}?${r.int(10)}*"),
-        Query(cls, s"*${r.int(10)}?${r.int(10)}.5*"))(k % 3)
-      case "count_by_time" => Vector(
-        Query(cls, s"*status=${r.pick(Codes)} *", bucketMs = Some(3600000L)),
-        Query(cls, "*connection error*", bucketMs = Some(86400000L)),
-        Query(cls, s"*login ${r.pick(Words)} for*", bucketMs = Some(21600000L)))(k % 3)
+    def present(re: scala.util.matching.Regex): scala.util.matching.Regex.Match = {
+      val hits = turns.flatMap(t => re.findFirstMatchIn(t.text))
+      hits(r.int(hits.length))
     }
-    val pool = for (k <- 0 until perClass; cls <- QueryClasses) yield one(cls, k)
-    // one fixed, seeded order: every run issues each class the same share
+    def dictVar(template: String): String = present(template.r).group(1)
+    val (lo, hi) = window(0.1)
+    val session = dictVar("""session (\w+) renewed""")
+    val account = dictVar("""account (\w+)$""")
+    val ip = present("""error \d+ from 10\.(\d)\.\d+\.(\d+) retry""".r)
+    val pool = Vector(
+      Query("exact_dict", s"*session $session renewed*"),
+      Query("exact_dict", s"*credited to account $account"),
+      Query("int_var", s"*status=${r.pick(Codes)} *"),
+      Query("int_var", s"*retry=${r.int(500)}"),
+      Query("mid_wildcard", s"*for user_${1 + r.int(9)}?${r.int(10)} from*"),
+      Query("mid_wildcard", s"*from 10.${ip.group(1)}.*.${ip.group(2)} retry*"),
+      Query("case_insensitive", s"*CONNECTION ERROR * FROM 10.${r.int(4)}.*", caseSensitive = false),
+      Query("case_insensitive", s"*LOGIN ${r.pick(Words).toUpperCase} FOR*", caseSensitive = false),
+      Query("ts_range", s"*status=${r.pick(Words)}*", tsLo = Some(lo), tsHi = Some(hi)),
+      Query("ts_range", "*connection error*", tsLo = Some(lo), tsHi = Some(hi)),
+      Query("pruned_empty", s"*session ${absentId(r.int(IdSpace))} renewed*"),
+      Query("pruned_empty", "*gc pause*", tsLo = Some(tsMax + 86400000L), tsHi = Some(tsMax + 2 * 86400000L)),
+      Query("forced_verify", s"*10.${r.int(4)}.1?.${r.int(256)}*"),
+      Query("forced_verify", s"*${r.int(10)}?${r.int(10)}.5*"),
+      Query("count_by_time", s"*status=${r.pick(Codes)} *", bucketMs = Some(3600000L)),
+      Query("count_by_time", "*connection error*", bucketMs = Some(86400000L)))
+    // one fixed, seeded order: every pass issues each class the same share
     pool.map(q => (r.long(), q)).sortBy(_._1).map(_._2)
   }
 

@@ -30,10 +30,10 @@ object Kernels {
   }
 
   def run(ctx: Ctx): Unit = {
-    val texts = Gen.turns(ctx.seed + 1, Msgs).map(_.text)
+    val turns = Gen.turns(ctx.seed + 1, Msgs)
+    val texts = turns.map(_.text)
     val encoded = texts.map(ClpEncoding.encode)
-    val patterns = Gen.queries(ctx.seed + 1, 1, Gen.BaseEpochMs, Gen.BaseEpochMs + 1)
-      .map(q => Wildcard.cleanUp(q.text))
+    val patterns = Gen.queries(ctx.seed + 1, turns.toIndexedSeq).map(q => Wildcard.cleanUp(q.text))
     val lines = Gen.records(ctx.seed + 1, JsonRecords).map(_.line)
     var sink = 0L // consumed below, so no kernel call is dead code
 
