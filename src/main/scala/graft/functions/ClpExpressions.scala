@@ -108,6 +108,19 @@ object ClpRuntime {
     new GenericArrayData(out)
   }
 
+  /** Value → id probe of one encode-side broadcast map (the logtype map's
+    * entries are (id, sink), the var map's the id alone). Like
+    * [[resolveEncode]], a missing value fails loudly. */
+  def dictId(bc: org.apache.spark.broadcast.Broadcast[_ <: java.util.Map[String, _]],
+             value: UTF8String): Long = {
+    val v = value.toString
+    bc.value.get(v) match {
+      case id: java.lang.Long => id.longValue()
+      case (id: Long, _) => id
+      case _ => throw new NoSuchElementException(s"value not in dictionary: $v")
+    }
+  }
+
   /** Encode-side broadcast resolution — the per-row function every pipeline
     * turn pays: logtype → (id, sink) probe, dict-var → global-id probes, and
     * the CLP-order var splice, in ONE walk with zero boxing beyond the map
@@ -399,6 +412,25 @@ case class DictValuesExpr(child: Expression,
   override protected def withNewChildInternal(c: Expression): DictValuesExpr =
     copy(child = c)
   override def prettyName: String = "dict_values"
+}
+
+/** `dict_id(value)` over one encode-side broadcast map bound at plan time —
+  * how the driver-mode dictionary tables take their ids from the very maps
+  * the encode pass resolves through, inside whole-stage codegen. */
+case class DictIdExpr(child: Expression,
+    bc: org.apache.spark.broadcast.Broadcast[_ <: java.util.Map[String, _]])
+    extends UnaryExpression {
+  override def dataType: DataType = LongType
+  override def nullSafeEval(value: Any): Any =
+    ClpRuntime.dictId(bc, value.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val bcRef = ctx.addReferenceObj("bcDict", bc,
+      classOf[org.apache.spark.broadcast.Broadcast[_]].getName)
+    defineCodeGen(ctx, ev, c => s"graft.functions.ClpRuntime.dictId($bcRef, $c)")
+  }
+  override protected def withNewChildInternal(c: Expression): DictIdExpr =
+    copy(child = c)
+  override def prettyName: String = "dict_id"
 }
 
 /** `clp_resolve(logtype, dict_vars, encoded_vars)` with BOTH broadcast
@@ -799,6 +831,12 @@ object ClpFunctions {
         org.apache.spark.sql.GraftExpr.expression(dictVars),
         org.apache.spark.sql.GraftExpr.expression(encodedVars),
         bcLt, bcVars))
+
+  /** Value → id through one encode-side broadcast map (see [[DictIdExpr]]). */
+  def dict_id(value: Column,
+      bc: org.apache.spark.broadcast.Broadcast[_ <: java.util.Map[String, _]]): Column =
+    org.apache.spark.sql.GraftExpr.column(
+      DictIdExpr(org.apache.spark.sql.GraftExpr.expression(value), bc))
 
   /** Broadcast-bound dictionary-id → value resolution; the broadcast rides
     * the Expression itself (no registry entry to leak one registration —

@@ -1,8 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.functions.ClpFunctions._
 
@@ -24,11 +23,12 @@ import graft.functions.ClpFunctions._
  *              reducer protocol (components/core/src/reducer/CountOperator.cpp)
  *
  * Scale notes (100 TB / 1000 executors): the only global structures are the
- * two dictionaries, which CLP itself bounds to fit memory
- * (streaming_archive/writer/Archive.cpp target_data_size_of_dicts); they are
- * broadcast. Everything else is a single hash-partitioned pass over the input
- * with map-side combine; the hot-logtype skew is defeated by the explicit
- * dict salt and by routing with (sink_id, hash(conv_id)) compound keys.
+ * two dictionaries. [[Dictionaries]] builds and resolves them: broadcast
+ * driver maps while both together hold at most [[DriverDictThreshold]]
+ * entries (CLP's memory-resident dictionaries), distributed joins above it.
+ * Everything else is a single hash-partitioned pass over the input with
+ * map-side combine; the hot-logtype skew is defeated by the explicit dict
+ * salt and by routing with (sink_id, hash(conv_id)) compound keys.
  */
 object ClpPipeline {
 
@@ -44,15 +44,16 @@ object ClpPipeline {
       keepParsed: Boolean = false,
       /** grok/regex schema mode (P6); None = CLP heuristic tokenizer. */
       tokenizerSchema: Option[graft.core.TokenizerSchema] = None,
-      /** Dictionaries at or below this cardinality resolve through a
-        * driver-built broadcast map (the CLP memory-resident-dict shape);
-        * above it every dict touch is distributed (hot-head broadcast +
-        * shuffle-join tail) and nothing dict-sized ever lands on the driver. */
+      /** While both dictionaries together hold at most this many entries
+        * they resolve through driver-built broadcast maps (the CLP
+        * memory-resident-dict shape); above it every dict touch is
+        * distributed and nothing dict-sized ever lands on the driver
+        * ([[Dictionaries.driverMode]]). */
       driverDictThreshold: Long = DriverDictThreshold,
       /** Distributed mode only: the N hottest dictionary entries (by count)
         * broadcast-joined before the shuffle-join tail — the Zipf head that
         * covers most row-side references without shuffling them. */
-      hotHeadSize: Int = 100000,
+      hotHeadSize: Int = Dictionaries.HotHeadSize,
       /** Parquet writer options applied to the PERSISTENT archive outputs
         * (routed segments, dictionaries, stats/lineage) — not the transient
         * `parsed` checkpoint, which stays on the fast session codec. The
@@ -90,273 +91,10 @@ object ClpPipeline {
         col("enc.encoded_vars").as("encoded_vars"))
   }
 
-  /** Dictionaries above this cardinality use the fully distributed ID path. */
+  /** Above this many dictionary entries (both dictionaries together) every
+    * dictionary touch is distributed — the one rule is
+    * [[Dictionaries.driverMode]]. */
   val DriverDictThreshold: Long = 2000000L
-
-  /**
-   * Salted two-phase count + deterministic dense ID assignment.
-   * Phase 1 aggregates (salt, value) so a single hot value (Zipf head) spreads
-   * over `saltParts` reducers; phase 2 merges the partials. IDs are
-   * rank-by-value — unlike first-seen order they are reproducible under any
-   * parallelism, which the resume tests rely on.
-   *
-   * ID assignment is hybrid: CLP itself keeps dictionaries memory-resident
-   * and bounded (streaming_archive/writer/Archive.cpp target_data_size_of_
-   * dicts), so the common case sorts the aggregated (value, cnt) pairs on the
-   * driver — one job, and the same array feeds the broadcast lookup. Above
-   * [[DriverDictThreshold]] the distributed dense-rank path (sort +
-   * zipWithIndex partition offsets) takes over.
-   */
-  def buildDict(values: DataFrame, valueCol: String, idCol: String, saltParts: Int,
-                driverDictThreshold: Long = DriverDictThreshold): DataFrame = {
-    val spark = values.sparkSession
-    import spark.implicits._
-    val counts = values
-      .withColumn("_salt", pmod(xxhash64(col(valueCol), spark_partition_id()), lit(saltParts)))
-      .groupBy(col("_salt"), col(valueCol)).agg(count(lit(1)).as("cnt"))
-      .groupBy(col(valueCol)).agg(sum(col("cnt")).as("cnt"))
-      .select(col(valueCol), col("cnt")).as[(String, Long)]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the path is chosen from a cheap cardinality count BEFORE anything is
-    // collected — never by surviving a driver OOM
-    val n = counts.count()
-    if (n <= driverDictThreshold) {
-      val local = counts.collect()
-      counts.unpersist()
-      val sorted = local.sortBy(_._1)
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          sorted.iterator.zipWithIndex.map { case ((v, c), ix) => Row(ix.toLong, v, c) }.toSeq,
-          math.max(1, sorted.length / 50000 + 1)),
-        dictSchema(idCol, valueCol))
-    } else {
-      // distributed dense IDs: range-partitioned sort by value (deterministic
-      // under any parallelism) + zipWithIndex partition offsets; materialized
-      // before unpersisting the aggregated counts so the sort runs exactly once
-      val sorted = counts.toDF(valueCol, "cnt").orderBy(valueCol)
-      val withIds = sorted.rdd.zipWithIndex.map { case (r, ix) =>
-        Row(ix, r.getString(0), r.getLong(1))
-      }
-      val dict = spark.createDataFrame(withIds, dictSchema(idCol, valueCol))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      dict.count()
-      counts.unpersist()
-      dict
-    }
-  }
-
-  private def dictSchema(idCol: String, valueCol: String): StructType = StructType(Seq(
-    StructField(idCol, LongType, nullable = false),
-    StructField(valueCol, StringType, nullable = false),
-    StructField("cnt", LongType, nullable = false)))
-
-  /** GLT sink assignment rule: hottest `maxSinks - 1` templates → dedicated
-    * sinks 1.., long tail → combined sink 0 (deterministic tie-break). */
-  private def assignSinks(lts: Array[(Long, String, Long)], maxSinks: Int): Map[Long, Int] =
-    lts.sortBy { case (_, v, c) => (-c, v) }.take(maxSinks - 1)
-      .zipWithIndex.map { case ((id, _, _), i) => id -> (i + 1) }.toMap
-
-  /**
-   * Fused one-pass dict build (driver path only): a SINGLE scan of `parsed`
-   * explodes (kind, value) rows for the logtype AND variable streams, one
-   * salted two-phase aggregation merges them, and one collect feeds the
-   * sink assignment, both dict writes, and the resolution broadcast maps —
-   * replacing two scans, two aggregations, and three driver round-trips.
-   * The 2→8-core profile showed the split build as the pipeline's one
-   * non-scaling stage; this is the serial-fraction fix.
-   * Returns None above the threshold → caller takes the per-dict
-   * (possibly distributed) path.
-   */
-  /** Fused driver-path dict build. On the Some branch the returned `counts`
-    * DataFrame (kind, value, cnt) is STILL PERSISTED — the caller writes the
-    * dict parquet from it distributed (ids via the resolution broadcast, so
-    * the written dicts and the maps are identical by construction, and no
-    * dictionary-sized row set is ever serialized from the driver) and then
-    * unpersists it. */
-  private[pipeline] def buildDictsFused(parsed: DataFrame, cfg: Config):
-      Option[(Array[(Long, String, Long, Int)], Array[(Long, String, Long)], DataFrame)] = {
-    val spark = parsed.sparkSession
-    import spark.implicits._
-    // union of two column-pruned scans (no struct materialization): the
-    // logtype pass stays a cheap single-column read, the var pass the usual
-    // explode — both feed ONE salted aggregation + ONE collect
-    val kv = parsed.select(lit(0).as("kind"), col("logtype").as("value"))
-      .unionByName(parsed.select(lit(1).as("kind"), explode(col("dict_vars")).as("value")))
-    val counts = kv
-      .withColumn("_salt", pmod(xxhash64(col("value"), spark_partition_id()), lit(cfg.saltParts)))
-      .groupBy(col("_salt"), col("kind"), col("value")).agg(count(lit(1)).as("cnt"))
-      .groupBy(col("kind"), col("value")).agg(sum(col("cnt")).as("cnt"))
-      .as[(Int, String, Long)]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = counts.count() // cardinality gate BEFORE any collect
-    if (n <= cfg.driverDictThreshold) {
-      val all = counts.collect()
-      def ranked(kind: Int): Array[(Long, String, Long)] = {
-        val entries = all.iterator.filter(_._1 == kind).map(t => (t._2, t._3)).toArray
-        java.util.Arrays.sort(entries, Ordering.by((e: (String, Long)) => e._1))
-        entries.iterator.zipWithIndex.map { case ((v, c), ix) => (ix.toLong, v, c) }.toArray
-      }
-      val lts = ranked(0)
-      val sinks = assignSinks(lts, cfg.maxSinks)
-      Some((lts.map { case (id, v, c) => (id, v, c, sinks.getOrElse(id, 0)) }, ranked(1),
-        counts.toDF("kind", "value", "cnt")))
-    } else { counts.unpersist(); None }
-  }
-
-  /** Logtype dictionary with GLT-style sink assignment: the `maxSinks - 1`
-    * hottest templates get dedicated sinks (1..), the long tail shares the
-    * combined sink 0 — the reference's combined-table threshold idea. */
-  def buildLogtypeDict(parsed: DataFrame, cfg: Config): DataFrame = {
-    val dict = buildDict(parsed.select(col("logtype")), "logtype", "logtype_id",
-      cfg.saltParts, cfg.driverDictThreshold)
-    val top = dict.orderBy(desc("cnt"), asc("logtype")).limit(cfg.maxSinks - 1)
-      .select("logtype_id").collect().map(_.getLong(0))
-    val spark = parsed.sparkSession
-    import spark.implicits._
-    val sinkMap = top.zipWithIndex.map { case (id, i) => (id, i + 1) }.toSeq
-      .toDF("logtype_id", "sink_id")
-    dict.join(broadcast(sinkMap), Seq("logtype_id"), "left")
-      .na.fill(0, Seq("sink_id"))
-  }
-
-  def buildVarDict(parsed: DataFrame, cfg: Config): DataFrame =
-    buildDict(parsed.select(explode(col("dict_vars")).as("value")), "value", "var_id",
-      cfg.saltParts, cfg.driverDictThreshold)
-
-  /**
-   * Stage 3+4 plan: resolve logtype → (logtype_id, sink_id) via broadcast join,
-   * map dictionary variables to their global IDs through the broadcast var
-   * dictionary, splice them into the single CLP-order `vars` stream, and
-   * broadcast-join the (role, tool) enrichment.
-   */
-  def encodeAndEnrich(parsed: DataFrame, logtypeDict: DataFrame, varDict: DataFrame,
-                      lookup: DataFrame, cfg: Config = Config("")): DataFrame = {
-    // broadcast mode holds BOTH dictionaries as driver maps, so the budget
-    // gate is their SUM — the same gate buildDictsFused uses (a max gate
-    // would admit two threshold-sized dicts, twice the budget)
-    val nDict = logtypeDict.count() + varDict.count()
-    if (nDict <= cfg.driverDictThreshold)
-      encodeAndEnrichBroadcast(parsed, logtypeDict, varDict, lookup)
-    else
-      encodeAndEnrichDistributed(parsed, logtypeDict, varDict, lookup, cfg)
-  }
-
-  /** Driver-map mode — CLP keeps both dictionaries memory-resident
-    * (streaming_archive/writer/Archive.cpp bounds them via
-    * target_data_size_of_dicts); under [[Config.driverDictThreshold]] the
-    * broadcast maps mirror that: one fused per-row function resolves
-    * logtype → (id, sink), maps dict vars to global IDs, and splices the
-    * merged CLP-order var stream — a single pass, no dictionary shuffle. */
-  private def encodeAndEnrichBroadcast(parsed: DataFrame, logtypeDict: DataFrame,
-                                       varDict: DataFrame, lookup: DataFrame): DataFrame = {
-    val ltMap: Map[String, (Long, Int)] =
-      logtypeDict.select("logtype", "logtype_id", "sink_id").collect()
-        .map(r => r.getString(0) -> ((r.getLong(1), r.getInt(2)))).toMap
-    val varMap: Map[String, Long] = varDict.select("value", "var_id").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    encodeAndEnrichWithMaps(parsed, ltMap, varMap, lookup)
-  }
-
-  /** Broadcast-mode core, callable with already-built maps (the fused dict
-    * path hands them over without a parquet re-collect round-trip). */
-  private[pipeline] def encodeAndEnrichWithMaps(parsed: DataFrame,
-                                                ltMap: Map[String, (Long, Int)],
-                                                varMap: Map[String, Long],
-                                                lookup: DataFrame): DataFrame = {
-    val spark = parsed.sparkSession
-    val ltJ = new java.util.HashMap[String, (Long, Int)](ltMap.size * 2)
-    ltMap.foreach { case (k, v) => ltJ.put(k, v) }
-    val varJ = new java.util.HashMap[String, java.lang.Long](varMap.size * 2)
-    varMap.foreach { case (k, v) => varJ.put(k, java.lang.Long.valueOf(v)) }
-    encodeAndEnrichWithJavaMaps(parsed,
-      spark.sparkContext.broadcast(ltJ), spark.sparkContext.broadcast(varJ), lookup)
-  }
-
-  /** Broadcast-mode core over presized java maps (hash probes without the
-    * immutable-Map tree walk; a 2M-entry map builds and serializes in a
-    * fraction of the Scala Map cost — driver seconds that count against
-    * every leg of a scaling run). */
-  private[pipeline] def encodeAndEnrichWithJavaMaps(parsed: DataFrame,
-      bcLt: org.apache.spark.broadcast.Broadcast[java.util.HashMap[String, (Long, Int)]],
-      bcVars: org.apache.spark.broadcast.Broadcast[java.util.HashMap[String, java.lang.Long]],
-      lookup: DataFrame): DataFrame = {
-    // codegen'd resolution (graft.functions.ClpResolveExpr): the broadcast
-    // maps ride the Expression, so the hottest per-row step of the pipeline
-    // stays inside whole-stage codegen instead of an interpreted closure UDF
-    parsed
-      .withColumn("e", graft.functions.ClpFunctions.clp_resolve(
-        col("logtype"), col("dict_vars"), col("encoded_vars"), bcLt, bcVars))
-      .select(
-        col("conv_id"), col("turn_idx"), col("role"), col("tool"), col("ts"),
-        col("n_bytes"),
-        col("e.logtype_id").as("logtype_id"), col("e.sink_id").as("sink_id"),
-        col("e.vars").as("vars"),
-        col("dict_vars"), col("encoded_vars"), col("logtype"))
-      .transform(enrich(lookup))
-  }
-
-  /**
-   * Distributed mode — nothing dictionary-sized ever lands on the driver:
-   *
-   *   1. logtype resolution: narrow (conv_id, turn_idx, logtype) projection
-   *      shuffle-joined with the logtype dict (AQE skew-join splits the hot
-   *      templates)
-   *   2. var-ID resolution: posexplode dict_vars → hot-head broadcast join
-   *      (top [[Config.hotHeadSize]] entries by count — the Zipf head that
-   *      resolves most references without a shuffle) → shuffle-join the
-   *      misses against the full dict → regroup to the per-row ID array by
-   *      position
-   *   3. ONE wide join of the original rows against the narrow resolution
-   *      key — the only shuffle that moves full rows
-   *
-   * This is the per-archive-unbounded twin of the reference's dictionary
-   * design: CLP bounds dicts per archive to stay memory-resident; at
-   * 10^8-10^9 distinct variables (UUIDs/IPs) no single map fits anywhere,
-   * so resolution itself becomes a join.
-   */
-  private def encodeAndEnrichDistributed(parsed: DataFrame, logtypeDict: DataFrame,
-                                         varDict: DataFrame, lookup: DataFrame,
-                                         cfg: Config): DataFrame =
-    resolveDistributed(parsed, logtypeDict, varDict, cfg).transform(enrich(lookup))
-
-  /** The distributed resolution core, shared with the streaming pipeline
-    * (which appends dict deltas and routes without the enrichment join). */
-  private[graft] def resolveDistributed(parsed: DataFrame, logtypeDict: DataFrame,
-                                        varDict: DataFrame, cfg: Config): DataFrame = {
-    val key = Seq("conv_id", "turn_idx")
-    val ltResolved = parsed.select(col("conv_id"), col("turn_idx"), col("logtype"))
-      .join(logtypeDict.select("logtype", "logtype_id", "sink_id"), Seq("logtype"))
-      .drop("logtype")
-
-    val exploded = parsed
-      .select(col("conv_id"), col("turn_idx"), posexplode(col("dict_vars")).as(Seq("pos", "value")))
-    val hot = varDict.orderBy(desc("cnt"), asc("value")).limit(math.max(cfg.hotHeadSize, 0))
-      .select(col("value"), col("var_id").as("hot_id"))
-    val hotJoined = exploded.join(broadcast(hot), Seq("value"), "left")
-    val hits = hotJoined.filter(col("hot_id").isNotNull)
-      .select(col("conv_id"), col("turn_idx"), col("pos"), col("hot_id").as("var_id"))
-    val misses = hotJoined.filter(col("hot_id").isNull)
-      .select(col("conv_id"), col("turn_idx"), col("pos"), col("value"))
-      .join(varDict.select("value", "var_id"), Seq("value"))
-      .select(col("conv_id"), col("turn_idx"), col("pos"), col("var_id"))
-    val varIds = hits.unionByName(misses)
-      .groupBy(key.map(col): _*)
-      .agg(sort_array(collect_list(struct(col("pos"), col("var_id")))).as("pv"))
-      .select(col("conv_id"), col("turn_idx"),
-        transform(col("pv"), p => p.getField("var_id")).as("dict_var_ids"))
-
-    val resolved = ltResolved.join(varIds, key, "left")
-    // merge through the codegen'd clp_merge_vars Expression; rows with no
-    // dict vars come out of the left join with a NULL id array → coalesce to
-    // empty (the UDF this replaces did the same null check per row)
-    parsed.join(resolved, key) // the single wide shuffle
-      .withColumn("vars", clp_merge_vars(col("logtype"), col("encoded_vars"),
-        coalesce(col("dict_var_ids"), typedLit(Array.empty[Long]))))
-      .select(
-        col("conv_id"), col("turn_idx"), col("role"), col("tool"), col("ts"),
-        col("n_bytes"), col("logtype_id"), col("sink_id"), col("vars"),
-        col("dict_vars"), col("encoded_vars"), col("logtype"))
-  }
 
   /** J4 enrichment: broadcast (role, tool) lookup join, shared by both modes. */
   private def enrich(lookup: DataFrame)(resolved: DataFrame): DataFrame = {
@@ -461,49 +199,20 @@ object ClpPipeline {
     val turnsIn = lineage.metric("parse", "input_rows")
       .getOrElse(parsed.count()) // metadata-only count on parquet
 
-    // fused driver-path dict build keeps the collected arrays for this run:
-    // sink assignment, both dict writes, AND the resolution broadcast maps
-    // come from ONE scan + ONE collect (no parquet re-collect round-trips).
-    // The dict parquet itself is written DISTRIBUTED from the still-persisted
-    // counts with ids resolved through the same broadcast the encode pass
-    // uses — identical by construction, and the driver never serializes a
-    // dictionary-sized row set (round 2 shipped ~22 MB parallelize tasks and
-    // burned seconds of serial time here, in both legs of every scaling run)
-    var fusedBc: Option[(
-      org.apache.spark.broadcast.Broadcast[java.util.HashMap[String, (Long, Int)]],
-      org.apache.spark.broadcast.Broadcast[java.util.HashMap[String, java.lang.Long]])] = None
-    val dictsDone = cfg.resume && lineage.isComplete("dicts")
-    if (!dictsDone) {
-      val t0 = System.nanoTime()
-      buildDictsFused(parsed, cfg) match {
-        case Some((lts, vars, counts)) =>
-          val ltJ = new java.util.HashMap[String, (Long, Int)](lts.length * 2)
-          lts.foreach { case (id, v, _, sink) => ltJ.put(v, (id, sink)) }
-          val varJ = new java.util.HashMap[String, java.lang.Long](vars.length * 2)
-          vars.foreach { case (id, v, _) => varJ.put(v, java.lang.Long.valueOf(id)) }
-          val bcLt = spark.sparkContext.broadcast(ltJ)
-          val bcVar = spark.sparkContext.broadcast(varJ)
-          val ltIdSink = udf((v: String) => bcLt.value.get(v))
-          val varId = udf((v: String) => bcVar.value.get(v).longValue())
-          counts.filter(col("kind") === 0)
-            .select(ltIdSink(col("value")).as("e"), col("value"), col("cnt"))
-            .select(col("e._1").as("logtype_id"), col("value").as("logtype"),
-              col("cnt"), col("e._2").as("sink_id"))
-            .write.mode("overwrite").options(cfg.parquetOptions).parquet(s"${cfg.outDir}/logtype_dict")
-          counts.filter(col("kind") === 1)
-            .select(varId(col("value")).as("var_id"), col("value"), col("cnt"))
-            .write.mode("overwrite").options(cfg.parquetOptions).parquet(s"${cfg.outDir}/var_dict")
-          counts.unpersist()
-          fusedBc = Some((bcLt, bcVar))
-        case None => // over threshold: per-dict path (distributed IDs)
-          buildLogtypeDict(parsed, cfg)
-            .write.mode("overwrite").options(cfg.parquetOptions).parquet(s"${cfg.outDir}/logtype_dict")
-          buildVarDict(parsed, cfg)
-            .write.mode("overwrite").options(cfg.parquetOptions).parquet(s"${cfg.outDir}/var_dict")
+    // the mode the dicts stage picked in this call; in driver mode it holds
+    // the encode maps built from the same collect, so route needs no re-read
+    val built: Option[Dictionaries.Mode] =
+      if (cfg.resume && lineage.isComplete("dicts")) None
+      else {
+        val t0 = System.nanoTime()
+        val dicts = Dictionaries.build(parsed, cfg.saltParts, cfg.maxSinks, cfg.driverDictThreshold)
+        dicts.logtypes.write.mode("overwrite").options(cfg.parquetOptions).parquet(s"${cfg.outDir}/logtype_dict")
+        dicts.vars.write.mode("overwrite").options(cfg.parquetOptions).parquet(s"${cfg.outDir}/var_dict")
+        dicts.release()
+        lineage.complete("dicts", Map("input_rows" -> turnsIn,
+          "duration_ms" -> (System.nanoTime() - t0) / 1000000))
+        Some(dicts.mode)
       }
-      lineage.complete("dicts", Map("input_rows" -> turnsIn,
-        "duration_ms" -> (System.nanoTime() - t0) / 1000000))
-    }
     lazy val logtypeDict = spark.read.parquet(s"${cfg.outDir}/logtype_dict")
     lazy val varDict = spark.read.parquet(s"${cfg.outDir}/var_dict")
 
@@ -511,11 +220,13 @@ object ClpPipeline {
     if (!routeDone) {
       val t0 = System.nanoTime()
       val lkp = lookup.getOrElse(TranscriptGen.roleToolLookup(spark))
-      val encoded = fusedBc match {
-        case Some((bcLt, bcVar)) => encodeAndEnrichWithJavaMaps(parsed, bcLt, bcVar, lkp)
-        case None => encodeAndEnrich(parsed, logtypeDict, varDict, lkp, cfg)
+      val resolved = built.getOrElse(
+          Dictionaries.mode(logtypeDict, varDict, cfg.driverDictThreshold)) match {
+        case maps: Dictionaries.DriverMaps => maps.resolve(parsed)
+        case Dictionaries.Distributed =>
+          Dictionaries.resolveDistributed(parsed, logtypeDict, varDict, cfg.hotHeadSize)
       }
-      route(encoded, cfg)
+      route(resolved.transform(enrich(lkp)), cfg)
       lineage.complete("route", Map("input_rows" -> turnsIn,
         "duration_ms" -> (System.nanoTime() - t0) / 1000000))
     }

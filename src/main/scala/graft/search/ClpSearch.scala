@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Wildcard
 import graft.functions.ClpFunctions._
-import graft.pipeline.ClpPipeline
+import graft.pipeline.{ClpPipeline, Dictionaries}
 
 /**
  * Wildcard search over the routed tables — the `clg` lifecycle (SURVEY §3.1)
@@ -16,19 +16,19 @@ import graft.pipeline.ClpPipeline
  */
 final class ClpSearch(spark: SparkSession, outDir: String,
                       driverDictThreshold: Long = ClpPipeline.DriverDictThreshold,
-                      hotHeadSize: Int = 100000) {
+                      hotHeadSize: Int = Dictionaries.HotHeadSize) {
 
   lazy val routed: DataFrame = spark.read.parquet(s"$outDir/routed")
   private lazy val varDictDf: DataFrame = spark.read.parquet(s"$outDir/var_dict")
   private lazy val logtypeDictFullDf: DataFrame = spark.read.parquet(s"$outDir/logtype_dict")
   private lazy val logtypeDictDf: DataFrame = logtypeDictFullDf.select("logtype_id", "logtype")
 
-  /** Driver-map mode iff both dicts fit under the threshold — the same gate
-    * as the pipeline's [[ClpPipeline.Config.driverDictThreshold]]; above it
-    * every dictionary touch (probe, scan, decode) runs as a Spark job and
+  /** Driver-map mode by the pipeline's own rule, [[Dictionaries.driverMode]]:
+    * both dictionaries together hold at most the threshold's entries. Above
+    * it every dictionary touch (probe, scan, decode) runs as a Spark job and
     * nothing dict-sized is ever collected. Parquet counts are metadata-cheap. */
   private lazy val useDriverMaps: Boolean =
-    math.max(varDictDf.count(), logtypeDictFullDf.count()) <= driverDictThreshold
+    Dictionaries.driverMode(logtypeDictFullDf, varDictDf, driverDictThreshold)
 
   private lazy val logtypeDict: Array[(Long, String, Int)] =
     logtypeDictFullDf
@@ -61,11 +61,11 @@ final class ClpSearch(spark: SparkSession, outDir: String,
       .drop("logtype", "_sv")
   }
 
-  /** Distributed decode (J3 as a real join): posexplode the var stream,
-    * resolve dictionary positions through a hot-head broadcast + shuffle-join
-    * tail against the inverse var dict, regroup by position, decode. The only
-    * wide shuffle is the final join back on the stable (conv_id, turn_idx)
-    * key. Mirrors [[ClpPipeline]]'s distributed encode mode. */
+  /** Distributed decode (J3 as a real join): the dictionary ids of the var
+    * stream resolve to values through [[Dictionaries.joinPositional]] (the
+    * same hot-head broadcast + shuffle-tail join the pipeline encodes with),
+    * then decode. The only wide shuffle is the final join back on the stable
+    * (conv_id, turn_idx) key. */
   private def withDecodedTextDistributed(rows: DataFrame): DataFrame = {
     val key = Seq("conv_id", "turn_idx")
     // same codegen'd placeholder walk as the broadcast mode: one
@@ -76,23 +76,8 @@ final class ClpSearch(spark: SparkSession, outDir: String,
       .join(logtypeDictDf, Seq("logtype_id"))
       .withColumn("_sv",
         graft.functions.ClpFunctions.clp_split_vars(col("logtype"), col("vars")))
-    val ex = withLt
-      .select(col("conv_id"), col("turn_idx"),
-        posexplode(col("_sv.dict_ids")).as(Seq("pos", "var_id")))
-    val hot = varDictDf.orderBy(desc("cnt"), asc("value")).limit(math.max(hotHeadSize, 0))
-      .select(col("var_id"), col("value").as("hot_value"))
-    val hotJoined = ex.join(broadcast(hot), Seq("var_id"), "left")
-    val hits = hotJoined.filter(col("hot_value").isNotNull)
-      .select(col("conv_id"), col("turn_idx"), col("pos"), col("hot_value").as("value"))
-    val misses = hotJoined.filter(col("hot_value").isNull)
-      .select(col("conv_id"), col("turn_idx"), col("pos"), col("var_id"))
-      .join(varDictDf.select("var_id", "value"), Seq("var_id"))
-      .select(col("conv_id"), col("turn_idx"), col("pos"), col("value"))
-    val dictVals = hits.unionByName(misses)
-      .groupBy(key.map(col): _*)
-      .agg(sort_array(collect_list(struct(col("pos"), col("value")))).as("pv"))
-      .select(col("conv_id"), col("turn_idx"),
-        transform(col("pv"), p => p.getField("value")).as("dict_vals"))
+    val dictVals = Dictionaries.joinPositional(withLt, key, col("_sv.dict_ids"), varDictDf,
+      from = "var_id", to = "value", out = "dict_vals", hotHeadSize)
     withLt.join(dictVals, key, "left") // the single wide shuffle
       .withColumn("text", clp_decode(col("logtype"), col("_sv.enc_vars"),
         coalesce(col("dict_vals"), array().cast("array<string>"))))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.pipeline.{ClpPipeline, TranscriptGen}
+import graft.pipeline.{ClpPipeline, Dictionaries, TranscriptGen}
 
 /**
  * Structured-Streaming ingestion — the reference's real-time IR path
@@ -20,14 +20,14 @@ import graft.pipeline.{ClpPipeline, TranscriptGen}
  * sequence reproduces the same dictionary (the streaming twin of the batch
  * determinism rule) and per-batch dictionary I/O is O(delta), not O(dict).
  *
- * The dictionary path is count-gated exactly like the batch pipeline
- * ([[ClpPipeline.Config.driverDictThreshold]]): at or below the threshold,
- * driver maps mirror CLP's memory-resident writer dicts (hydrated once per
- * engine instance, extended incrementally); above it NOTHING dict-sized
- * touches the driver — new values are discovered by a distributed anti-join
- * against the dict parquet, IDs assigned by sort + zipWithIndex offset from
- * the current max, and row resolution reuses the batch pipeline's hot-head
- * broadcast + shuffle-tail join ([[ClpPipeline.resolveDistributed]]).
+ * The dictionary mode follows the batch pipeline's one rule
+ * ([[Dictionaries.driverMode]]: both dictionaries together within the
+ * threshold): in driver mode, maps mirror CLP's memory-resident writer dicts
+ * (hydrated once per engine instance, extended incrementally); above it
+ * NOTHING dict-sized touches the driver — new values are discovered by a
+ * distributed anti-join against the dict parquet. Either way new values get
+ * [[Dictionaries.rankIds]] from the current max + 1, and rows resolve through
+ * the module's broadcast maps or its hot-head + shuffle-tail join.
  */
 final class StreamingPipeline(spark: SparkSession, outDir: String,
                               driverDictThreshold: Long = ClpPipeline.DriverDictThreshold) {
@@ -73,9 +73,7 @@ final class StreamingPipeline(spark: SparkSession, outDir: String,
       new java.io.File(s"$ltDictPath/_SUCCESS").exists()
     // cheap cardinality gate BEFORE anything dict-sized is materialized —
     // parquet row counts come from footers, no scan
-    // SUM, not max: driver mode holds both dictionaries as driver maps —
-    // the same budget semantics as the batch pipeline's gates
-    val dictCount: Long = dictState match {
+    val dictEntries: Long = dictState match {
       case Some((v, l)) => v.size.toLong + l.size.toLong
       case None if haveDicts =>
         spark.read.parquet(varDictPath).count() +
@@ -84,7 +82,8 @@ final class StreamingPipeline(spark: SparkSession, outDir: String,
     }
 
     val routed =
-      if (dictCount <= driverDictThreshold) processDriverMode(parsed, haveDicts)
+      if (Dictionaries.driverMode(dictEntries, driverDictThreshold))
+        processDriverMode(parsed, haveDicts)
       else { dictState = None; processDistributedMode(parsed, haveDicts) }
 
     routed
@@ -107,15 +106,13 @@ final class StreamingPipeline(spark: SparkSession, outDir: String,
       else (Map.empty[String, Long], Map.empty[String, Long])
     }
 
-    val newVarValues = parsed.select(explode(col("dict_vars")).as("value"))
-      .distinct().as[String].collect().filterNot(oldVars.contains).sorted
-    val newLtValues = parsed.select(col("logtype")).distinct().as[String]
-      .collect().filterNot(oldLts.contains).sorted
-
-    val varBase = if (oldVars.isEmpty) 0L else oldVars.values.max + 1
-    val ltBase = if (oldLts.isEmpty) 0L else oldLts.values.max + 1
-    val vars = oldVars ++ newVarValues.zipWithIndex.map { case (v, i) => v -> (varBase + i) }
-    val lts = oldLts ++ newLtValues.zipWithIndex.map { case (v, i) => v -> (ltBase + i) }
+    def delta(values: DataFrame, old: Map[String, Long]): Array[(Long, String)] =
+      Dictionaries.rankIds(values.distinct().as[String].collect().filterNot(old.contains),
+        if (old.isEmpty) 0L else old.values.max + 1)(identity)
+    val newVars = delta(parsed.select(explode(col("dict_vars"))), oldVars)
+    val newLts = delta(parsed.select(col("logtype")), oldLts)
+    val vars = oldVars ++ newVars.map(_.swap)
+    val lts = oldLts ++ newLts.map(_.swap)
 
     // the FIRST write per dict is an overwrite: a crash between a prior
     // attempt's task commits and its _SUCCESS marker can leave orphan part
@@ -123,38 +120,25 @@ final class StreamingPipeline(spark: SparkSession, outDir: String,
     // overwrite clears the remnants. Committed dicts (_SUCCESS present)
     // only ever receive true deltas.
     val firstWriteMode = if (haveDicts) "append" else "overwrite"
-    if (newVarValues.nonEmpty || !haveDicts)
-      newVarValues.zipWithIndex.map { case (v, i) => (varBase + i, v) }.toSeq
-        .toDF("var_id", "value")
+    if (newVars.nonEmpty || !haveDicts)
+      newVars.toSeq.toDF("var_id", "value")
         .coalesce(1).write.mode(firstWriteMode).parquet(varDictPath)
-    if (newLtValues.nonEmpty || !haveDicts)
-      newLtValues.zipWithIndex.map { case (v, i) => (ltBase + i, v) }.toSeq
-        .toDF("logtype_id", "logtype")
+    if (newLts.nonEmpty || !haveDicts)
+      newLts.toSeq.toDF("logtype_id", "logtype")
         .coalesce(1).write.mode(firstWriteMode).parquet(ltDictPath)
     dictState = Some((vars, lts))
 
-    // encode via broadcast maps (sink = logtype_id % 16 for the stream)
-    // through the same codegen'd clp_resolve Expression as the batch
-    // pipeline — the streaming sink rule is folded into the broadcast map
-    val ltJ = new java.util.HashMap[String, (Long, Int)](lts.size * 2)
-    lts.foreach { case (v, id) => ltJ.put(v, (id, (id % 16).toInt)) }
-    val varJ = new java.util.HashMap[String, java.lang.Long](vars.size * 2)
-    vars.foreach { case (k, v) => varJ.put(k, java.lang.Long.valueOf(v)) }
-    val bcLts = spark.sparkContext.broadcast(ltJ)
-    val bcVars = spark.sparkContext.broadcast(varJ)
-    parsed
-      .withColumn("e", graft.functions.ClpFunctions.clp_resolve(
-        col("logtype"), col("dict_vars"), col("encoded_vars"), bcLts, bcVars))
-      .select(col("conv_id"), col("turn_idx"), col("role"), col("tool"), col("ts"),
-        col("n_bytes"), col("e.logtype_id").as("logtype_id"),
-        col("e.sink_id").as("sink_id"), col("e.vars").as("vars"))
+    // the stream's sink rule (logtype_id % 16) is folded into the maps
+    Dictionaries.driverMaps(spark,
+      lts.view.map { case (v, id) => (v, id, (id % 16).toInt) }, vars)
+      .resolve(parsed)
   }
 
   /** Above the threshold nothing dict-sized lands on the driver: anti-join
-    * delta discovery, sort+zipWithIndex ID assignment offset from the stored
-    * max, delta append, and the batch pipeline's hot-head + shuffle-tail
-    * resolution. A first batch at threshold 0 produces EXACTLY the batch
-    * pipeline's dictionary (same sort, same dense ids from 0). */
+    * delta discovery, distributed rank-by-value ids from the stored max + 1,
+    * delta append, and the hot-head + shuffle-tail resolution. A first batch
+    * at threshold 0 produces EXACTLY the batch pipeline's dictionary (same
+    * sort, same dense ids from 0). */
   private def processDistributedMode(parsed: DataFrame, haveDicts: Boolean): DataFrame = {
     val (varDict0, ltDict0) =
       if (haveDicts) (spark.read.parquet(varDictPath), spark.read.parquet(ltDictPath))
@@ -168,18 +152,9 @@ final class StreamingPipeline(spark: SparkSession, outDir: String,
            StructField("logtype", StringType)))))
       }
 
-    def appendDelta(newVals: DataFrame, valueCol: String, idCol: String,
-                    existing: DataFrame, path: String): Unit = {
+    def appendDelta(newVals: DataFrame, idCol: String, existing: DataFrame, path: String): Unit = {
       val base = existing.agg(coalesce(max(col(idCol)) + 1L, lit(0L))).collect()(0).getLong(0)
-      val sorted = newVals.orderBy(valueCol)
-      val withIds = sorted.rdd.zipWithIndex.map { case (r, ix) =>
-        org.apache.spark.sql.Row(base + ix, r.getString(0))
-      }
-      spark.createDataFrame(withIds, org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField(idCol,
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField(valueCol,
-            org.apache.spark.sql.types.StringType))))
+      Dictionaries.rankIds(newVals, idCol, base)
         // same partial-commit healing as the driver mode: the first write
         // overwrites any orphan part files a crashed attempt left without
         // its _SUCCESS marker; committed dicts only receive deltas
@@ -189,11 +164,11 @@ final class StreamingPipeline(spark: SparkSession, outDir: String,
     appendDelta(
       parsed.select(explode(col("dict_vars")).as("value")).distinct()
         .join(varDict0.select("value"), Seq("value"), "left_anti"),
-      "value", "var_id", varDict0, varDictPath)
+      "var_id", varDict0, varDictPath)
     appendDelta(
       parsed.select(col("logtype")).distinct()
         .join(ltDict0.select("logtype"), Seq("logtype"), "left_anti"),
-      "logtype", "logtype_id", ltDict0, ltDictPath)
+      "logtype_id", ltDict0, ltDictPath)
 
     // re-read the now-complete dicts; hot-head ordering proxies count by
     // insertion age (earliest ids ≈ values present since the first batches —
@@ -203,10 +178,7 @@ final class StreamingPipeline(spark: SparkSession, outDir: String,
       .withColumn("cnt", -col("var_id"))
     val ltDict = spark.read.parquet(ltDictPath)
       .withColumn("sink_id", pmod(col("logtype_id"), lit(16)).cast("int"))
-    ClpPipeline.resolveDistributed(parsed, ltDict, varDict,
-        ClpPipeline.Config(outDir, driverDictThreshold = driverDictThreshold))
-      .select(col("conv_id"), col("turn_idx"), col("role"), col("tool"), col("ts"),
-        col("n_bytes"), col("logtype_id"), col("sink_id"), col("vars"))
+    Dictionaries.resolveDistributed(parsed, ltDict, varDict, Dictionaries.HotHeadSize)
   }
 
   /** Exactly-once view of the routed stream: collapses the byte-identical

@@ -5,7 +5,11 @@ import org.apache.spark.sql.SparkSession
 import graft.pipeline.{ClpPipeline, TranscriptGen}
 
 /** Dev-only: per-stage wall times of the pipeline at a given core count
-  * (read back from the lineage manifests). */
+  * (read back from the lineage manifests). The benchmark times the
+  * driver-map dictionary mode; this is the tool that times the distributed
+  * mode at scale (third argument `0`).
+  *
+  * Usage: ProfilePipeline [cores] [turns] [driverDictThreshold] */
 object ProfilePipeline {
   def main(args: Array[String]): Unit = {
     val cores = if (args.nonEmpty) args(0).toInt else 32

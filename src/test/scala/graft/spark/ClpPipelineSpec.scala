@@ -3,7 +3,7 @@ package graft.spark
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
-import graft.pipeline.{ClpPipeline, TranscriptGen}
+import graft.pipeline.{ClpPipeline, Dictionaries, TranscriptGen, Turn}
 
 class ClpPipelineSpec extends SparkSpecBase {
 
@@ -49,7 +49,8 @@ class ClpPipelineSpec extends SparkSpecBase {
     assert(values.sameElements(values.sorted))
     // rebuilding under different parallelism yields identical IDs
     val parsed2 = ClpPipeline.parse(turns.repartition(13))
-    val vd2 = ClpPipeline.buildVarDict(parsed2, cfg).orderBy("var_id").collect()
+    val vd2 = Dictionaries.build(parsed2, cfg.saltParts, cfg.maxSinks, cfg.driverDictThreshold)
+      .vars.orderBy("var_id").collect()
     assert(vd2.map(r => (r.getLong(0), r.getString(1))).toSeq ==
       vd.map(r => (r.getLong(0), r.getString(1))).toSeq)
   }
@@ -133,33 +134,63 @@ class ClpPipelineSpec extends SparkSpecBase {
   }
 
   test("fully distributed dictionary path (driverDictThreshold=0) reproduces the broadcast archive") {
-    result // force the broadcast-path run first
-    val out2 = Files.createTempDirectory("graft-pipe-dist").toString
-    // threshold 0 forces count-gated distributed ID assignment, the hot-head
-    // (3 entries) + shuffle-join-tail resolution, and distributed decode —
-    // the end-to-end no-driver-map mode
-    val res2 = ClpPipeline.run(spark, turns,
-      cfg.copy(outDir = out2, driverDictThreshold = 0L, hotHeadSize = 3))
-    assert(res2.rowsRouted == result.turnsIn)
-    assert(res2.nVars == result.nVars && res2.nLogtypes == result.nLogtypes)
-    // dictionaries identical to the driver-path build (rank-by-value IDs are
-    // path- and parallelism-invariant)
+    // three thresholds build the same archive: the default (driver maps,
+    // `result`), 0, and a straddle between the larger dictionary and the sum
+    result // force the default (driver-map) run first
+    // the straddle: each dictionary alone fits, both together do not, so
+    // the sum rule must pick the distributed mode
+    val straddle = math.max(result.nVars, result.nLogtypes)
+    assert(straddle < result.nVars + result.nLogtypes)
     def dict(dir: String, name: String, idc: String, vc: String) =
       spark.read.parquet(s"$dir/$name").select(idc, vc).orderBy(idc)
         .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-    assert(dict(out2, "var_dict", "var_id", "value") ==
-      dict(outDir, "var_dict", "var_id", "value"))
-    assert(dict(out2, "logtype_dict", "logtype_id", "logtype") ==
-      dict(outDir, "logtype_dict", "logtype_id", "logtype"))
-    // routed rows identical
     def routedSet(dir: String) = spark.read.parquet(s"$dir/routed")
       .select("conv_id", "turn_idx", "logtype_id", "sink_id", "vars").collect()
       .map(r => (r.getString(0), r.getInt(1), r.getLong(2),
         r.getAs[Number]("sink_id").intValue, r.getSeq[Long](4).mkString(","))).toSet
-    assert(routedSet(out2) == routedSet(outDir))
-    // byte-exact decode through the distributed (no-driver-map) decode join
-    assert(ClpPipeline.roundTripViolations(spark, turns, out2,
-      driverDictThreshold = 0L).count() == 0)
+    assert(ClpPipeline.roundTripViolations(spark, turns, outDir).count() == 0)
+    for (t <- Seq(0L, straddle)) {
+      val out2 = Files.createTempDirectory(s"graft-pipe-dist$t").toString
+      // below the sum: count-gated distributed ID assignment, the hot-head
+      // (3 entries) + shuffle-join-tail resolution, and distributed decode —
+      // the end-to-end no-driver-map mode
+      val res2 = ClpPipeline.run(spark, turns,
+        cfg.copy(outDir = out2, driverDictThreshold = t, hotHeadSize = 3))
+      assert(res2.rowsRouted == result.turnsIn)
+      assert(res2.nVars == result.nVars && res2.nLogtypes == result.nLogtypes)
+      // dictionaries identical to the driver-path build (rank-by-value IDs are
+      // path- and parallelism-invariant)
+      assert(dict(out2, "var_dict", "var_id", "value") ==
+        dict(outDir, "var_dict", "var_id", "value"), s"var dict at threshold $t")
+      assert(dict(out2, "logtype_dict", "logtype_id", "logtype") ==
+        dict(outDir, "logtype_dict", "logtype_id", "logtype"), s"logtype dict at threshold $t")
+      assert(spark.read.parquet(s"$out2/logtype_dict").select("logtype_id", "sink_id")
+        .collect().toSet ==
+        spark.read.parquet(s"$outDir/logtype_dict").select("logtype_id", "sink_id")
+          .collect().toSet, s"sinks at threshold $t")
+      // routed rows identical
+      assert(routedSet(out2) == routedSet(outDir), s"routed rows at threshold $t")
+      // byte-exact decode through the distributed (no-driver-map) decode join
+      assert(ClpPipeline.roundTripViolations(spark, turns, out2,
+        driverDictThreshold = t).count() == 0, s"round trip at threshold $t")
+    }
+  }
+
+  test("driver and distributed modes number non-ASCII logtypes the same") {
+    import spark.implicits._
+    val ts = new java.sql.Timestamp(1704067200000L)
+    // non-ASCII text delimits tokens, so it lands in the logtypes
+    val edgy = ClpPipelineSpec.NonAscii.zipWithIndex.map { case (s, i) =>
+      Turn(s"c$i", 0, "user", s"$s x$i", "t", ts) }.toDF()
+    def dicts(threshold: Long) = {
+      val out = Files.createTempDirectory("graft-pipe-utf").toString
+      ClpPipeline.run(spark, edgy, cfg.copy(outDir = out, driverDictThreshold = threshold))
+      Seq("logtype_dict", "var_dict").map(d =>
+        spark.read.parquet(s"$out/$d").collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq)
+    }
+    val driver = dicts(ClpPipeline.DriverDictThreshold)
+    assert(driver.head.length == ClpPipelineSpec.NonAscii.length)
+    assert(dicts(0L) == driver)
   }
 
   test("partition lineage covers all routed rows") {
@@ -186,4 +217,11 @@ class ClpPipelineSpec extends SparkSpecBase {
         .mapToLong(p => p.toFile.length).sum
     assert(bytes(s"$out2/routed") < bytes(s"$outDir/routed"))
   }
+}
+
+object ClpPipelineSpec {
+  /** U+E000..U+FFFF sort BELOW supplementary characters in code point (and
+    * UTF-8 byte) order but ABOVE them in UTF-16 unit order. */
+  val NonAscii: Seq[String] = Seq("\uFFFD", "\uE000", "\uD83D\uDE00", "\uD800\uDC00", "\u00E9",
+    "z", "a\uFFFD", "a\uD83D\uDE00", "\uFFFF\uFFFF", "\uD83D\uDE00\uD83D\uDE00", "\u007F")
 }

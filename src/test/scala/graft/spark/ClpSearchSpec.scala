@@ -138,6 +138,28 @@ class ClpSearchSpec extends SparkSpecBase {
     assert(eD.candidates("*status=zzznotastatus here*").isEmpty)
   }
 
+  test("search picks the pipeline's mode: between max and sum it decodes distributed") {
+    engine // force archive build
+    val nLt = spark.read.parquet(s"$outDir/logtype_dict").count()
+    val nVar = spark.read.parquet(s"$outDir/var_dict").count()
+    // each dictionary alone fits this threshold, both together do not: the
+    // pipeline's sum rule would not hold both as driver maps, so search
+    // must not either
+    val t = math.max(nLt, nVar)
+    assert(t < nLt + nVar)
+    val e = new ClpSearch(spark, outDir, driverDictThreshold = t, hotHeadSize = 3)
+    val decoded = e.withDecodedText(e.routed)
+    val p = decoded.queryExecution.executedPlan.toString
+    assert(!p.contains("dict_values"), s"driver-map decode planned above the sum rule:\n$p")
+    assert(p.contains("clp_split_vars"))
+    val text = decoded.select("conv_id", "turn_idx", "text").collect()
+      .map(r => (r.getString(0), r.getInt(1)) -> r.getString(2)).toMap
+    assert(text == turns.select("conv_id", "turn_idx", "text").collect()
+      .map(r => (r.getString(0), r.getInt(1)) -> r.getString(2)).toMap)
+    for (q <- Seq("*connection error*", "*status=failed", "*status=fail*"))
+      assert(got(e.search(q)) == oracle(q), s"mismatch for '$q' at threshold $t")
+  }
+
   test("out-of-range ts query prunes every sink via the stats index (R3)") {
     engine // force archive build
     val maxTs = spark.read.parquet(s"$outDir/sink_stats")

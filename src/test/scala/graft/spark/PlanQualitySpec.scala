@@ -1,7 +1,10 @@
 package graft.spark
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.pipeline.ClpPipeline
 
 /** Physical-plan assertions: filters/projections reach the parquet scan,
   * dimension joins broadcast, aggregations split partial/final, windowed
@@ -77,24 +80,52 @@ class PlanQualitySpec extends SparkSpecBase {
   }
 
   test("encode resolution is the codegen'd clp_resolve expression — UDF-free") {
-    import graft.pipeline.{ClpPipeline, TranscriptGen}
-    val cfg = ClpPipeline.Config("", maxSinks = 8, saltParts = 4)
+    import graft.pipeline.{Dictionaries, TranscriptGen}
     val parsed = ClpPipeline.parse(TranscriptGen.turns(spark, 2000, seed = 7L).toDF)
-    val lkp = TranscriptGen.roleToolLookup(spark)
-    // broadcast mode (dicts under the threshold): clp_resolve carries the maps
-    val pb = executedPlan(
-      ClpPipeline.encodeAndEnrich(parsed, ClpPipeline.buildLogtypeDict(parsed, cfg),
-        ClpPipeline.buildVarDict(parsed, cfg), lkp, cfg))
+    // driver mode (dicts under the threshold): clp_resolve carries the maps
+    val b = Dictionaries.build(parsed, saltParts = 4, maxSinks = 8,
+      threshold = ClpPipeline.DriverDictThreshold)
+    val maps = b.mode match {
+      case m: Dictionaries.DriverMaps => m
+      case other => fail(s"expected driver maps under the default threshold, got $other")
+    }
+    val pb = executedPlan(maps.resolve(parsed))
     assert(pb.contains("clp_resolve"), "expected the codegen'd encode expression")
     assert(!pb.contains("UDF("), "interpreted UDF crept back into the encode path")
     assert(pb.contains("[codegen id :"))
+    // the driver-mode dictionary tables take their ids from the same maps
+    val pt = executedPlan(b.logtypes) + executedPlan(b.vars)
+    assert(pt.contains("dict_id") && !pt.contains("UDF("),
+      "interpreted UDF crept back into the dictionary tables")
+    b.release()
     // distributed mode (threshold 0): the var splice is clp_merge_vars
-    val cfg0 = cfg.copy(driverDictThreshold = 0L)
-    val pd = executedPlan(
-      ClpPipeline.encodeAndEnrich(parsed, ClpPipeline.buildLogtypeDict(parsed, cfg0),
-        ClpPipeline.buildVarDict(parsed, cfg0), lkp, cfg0))
+    val b0 = Dictionaries.build(parsed, saltParts = 4, maxSinks = 8, threshold = 0L)
+    assert(b0.mode == Dictionaries.Distributed)
+    val pd = executedPlan(Dictionaries.resolveDistributed(parsed, b0.logtypes, b0.vars, 3))
     assert(pd.contains("clp_merge_vars"), "expected the codegen'd merge expression")
     assert(!pd.contains("UDF("), "interpreted UDF crept back into the distributed merge")
+    b0.release()
+  }
+
+  test("no plan a ClpPipeline.run executes contains an interpreted UDF") {
+    import graft.pipeline.TranscriptGen
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(funcName -> s"${qe.analyzed}\n${qe.executedPlan}")
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val out = java.nio.file.Files.createTempDirectory("graft-run-plans").toString
+    val turns = TranscriptGen.turns(spark, 2000, seed = 7L).toDF
+    spark.listenerManager.register(listener)
+    try {
+      ClpPipeline.run(spark, turns, ClpPipeline.Config(out, maxSinks = 8, saltParts = 4))
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(plans.size >= 5, s"expected every stage's plans, got ${plans.size}")
+    plans.forEach { case (name, p) =>
+      assert(!p.contains("UDF("), s"interpreted UDF in a $name plan of ClpPipeline.run:\n$p")
+    }
   }
 
   test("curation gates: broadcasts where intended, no cartesian blowups") {

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.pipeline.{ClpPipeline, TranscriptGen, Turn}
+import graft.pipeline.{ClpPipeline, Dictionaries, TranscriptGen, Turn}
 import graft.streaming.StreamingPipeline
 
 /** Streaming ingestion: two micro-batches through the encode+route path —
@@ -134,9 +134,8 @@ class StreamingPipelineSpec extends SparkSpecBase {
       .processBatch(all.toDF, 0L)
     val streamDict = spark.read.parquet(s"$oneDir/var_dict")
       .as[(Long, String)].collect().toMap
-    val batchDict = ClpPipeline.buildVarDict(parsedAll,
-        ClpPipeline.Config(oneDir, driverDictThreshold = 0L))
-      .select("var_id", "value").as[(Long, String)].collect().toMap
+    val batchDict = Dictionaries.build(parsedAll, saltParts = 64, maxSinks = 64, threshold = 0L)
+      .vars.select("var_id", "value").as[(Long, String)].collect().toMap
     assert(streamDict == batchDict)
   }
 
