@@ -55,22 +55,6 @@ object McpServer {
     def searchByKql(kql: String, maxResults: Int): (Seq[LogEvent], Boolean)
   }
 
-  /** Binary UTF-8 comparison — the exact string order Spark's own sorts use
-    * (UTF8String.compareTo), for driver-side merges that must agree with an
-    * executor-side `orderBy`. */
-  private def utf8Compare(a: String, b: String): Int = {
-    val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val n = math.min(x.length, y.length)
-    var i = 0
-    while (i < n) {
-      val c = (x(i) & 0xff) - (y(i) & 0xff)
-      if (c != 0) return c
-      i += 1
-    }
-    x.length - y.length
-  }
-
   /** Shared collect shape: order `tsCol` newest-first (events without a
     * timestamp sort oldest, mirroring utils.py sort_by_timestamp's -1 key),
     * tie-break on message for deterministic paging, fetch maxResults+1 via
@@ -166,11 +150,12 @@ object McpServer {
           if (e._3 == null) 0L else -e._3.getTime, e._1))
       // merge buffer ordered like collectNewestFirst's global cut:
       // (ts desc nulls last, msg asc), at most k+1 rows. The message leg
-      // compares UTF-8 BYTES, not JVM chars: Spark orders strings by binary
-      // UTF-8 (UTF8String), and Scala's UTF-16 code-unit order disagrees for
-      // supplementary-plane text vs U+E000–U+FFFF — a driver-side sort in
-      // the other order would break the batched ≡ single-union invariant on
-      // ties at the page boundary
+      // compares in UTF-8 byte order (Dictionaries.ValueOrder), not JVM
+      // chars: Spark orders strings by binary UTF-8 (UTF8String), and
+      // Scala's UTF-16 code-unit order disagrees for supplementary-plane
+      // text vs U+E000–U+FFFF — a driver-side sort in the other order
+      // would break the batched ≡ single-union invariant on ties at the
+      // page boundary
       val ord = new Ordering[LogEvent] {
         def compare(a: LogEvent, b: LogEvent): Int = {
           val an = a.tsMs.isEmpty; val bn = b.tsMs.isEmpty
@@ -179,7 +164,7 @@ object McpServer {
             val c = java.lang.Long.compare(b.tsMs.get, a.tsMs.get)
             if (c != 0) return c
           }
-          utf8Compare(a.message, b.message)
+          graft.pipeline.Dictionaries.ValueOrder.compare(a.message, b.message)
         }
       }
       var buf = Vector.empty[LogEvent]

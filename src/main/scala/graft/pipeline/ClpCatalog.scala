@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multi-archive catalog — the reference's archive metadata database
@@ -8,105 +8,177 @@ import org.apache.spark.sql.functions._
   * `archives(begin_timestamp, end_timestamp, uncompressed_size, …)`, and the
   * compression scheduler that opens one archive per job) re-expressed as a
   * tiny snapshot-versioned [[LakeTable]] next to the archive directories it
-  * indexes: each archive registers itself with an atomic [[appendEntry]]
-  * commit, and searches can pin the fleet as-of a catalog snapshot.
+  * indexes: each archive registers itself with an atomic commit, and
+  * searches can pin the fleet as-of a catalog snapshot.
   *
-  * Ingest writes one CLP archive per slice value plus one catalog row with
-  * that archive's timestamp bounds and message count (rolled up from its
-  * `sink_stats`, the same index [[graft.search.ClpSearch]] consults
-  * per-sink). Search reads the catalog FIRST — O(#archives) metadata, never
-  * data — and compiles per-archive plans only for archives whose
-  * [begin, end] intersects the query range, exactly the reference's
-  * "evaluate the timestamp index before decompressing anything" rule
-  * (`clp_s/search/EvaluateTimestampIndex.cpp`) lifted one level, from sinks
-  * within an archive to archives within a fleet. At fleet scale (10^4-10^5
-  * archives on object storage) a time-bounded query opens a handful of
-  * archive directories; the catalog itself stays kilobytes.
+  * A fleet holds text archives ([[ClpPipeline]]) or JSON archives
+  * ([[JsonPipeline]]), one per slice value, plus one catalog row per archive:
+  * its timestamp bounds and message count (rolled up from the archive's own
+  * metadata tables), its user tags, and one summary column of its kind —
+  * the dictionary Bloom filter `dict_bloom` ([[DictBloom]]) for text
+  * archives, the MPT leaf set `columns` for JSON archives (the reference's
+  * column index, `clp_s/indexer/IndexManager.cpp`). Search reads the catalog
+  * FIRST — O(#archives) metadata, never data — and opens only the archives
+  * the one admission rule admits: [begin, end] overlaps the query window,
+  * a requested tag is carried, and the kind's summary can match the query
+  * ("evaluate the timestamp index before decompressing anything",
+  * `clp_s/search/EvaluateTimestampIndex.cpp`, lifted from sinks within an
+  * archive to archives within a fleet). At fleet scale (10^4-10^5 archives
+  * on object storage) a narrow query opens a handful of archive
+  * directories; the catalog itself stays kilobytes.
+  *
+  * Every fleet decision — the slice-ingest loop, registration, admission,
+  * the fan-out bound — is written once below; an archive kind supplies
+  * only its route, its summary column and its per-archive search.
   */
 object ClpCatalog {
 
-  /** Routes `turns` into one archive per distinct `sliceCol` value under
-    * `outDir/archives/arch_<slice>`, then writes `outDir/catalog`.
+  /** Routes `turns` into one text archive per distinct `sliceCol` value
+    * under `outDir/archives/arch_<slice>`, then writes `outDir/catalog`.
     *
     * The per-slice loop is the TEST harness shape: the distinct slice list
     * is archive-count-sized (catalog-tiny, never row-sized). In production
     * each archive is written by its own ingest job as data arrives (the
     * reference's scheduler dispatches one compression job per archive) and
-    * `appendEntry` registers it — there is no fleet-wide loop anywhere.
+    * [[appendEntry]] registers it — there is no fleet-wide loop anywhere.
     */
   def ingest(spark: SparkSession, turns: DataFrame, sliceCol: Column,
              outDir: String, maxSinks: Int = 8, saltParts: Int = 8,
-             tagsFor: String => Seq[String] = _ => Nil): Unit = {
+             tagsFor: String => Seq[String] = _ => Nil): Unit =
+    ingestSlices(spark, turns, sliceCol, outDir, tagsFor, Text) { (rows, dir) =>
+      ClpPipeline.run(spark, rows,
+        ClpPipeline.Config(dir, maxSinks = maxSinks, saltParts = saltParts))
+    }
+
+  /** Routes `jsonl` into one JSON archive per distinct `sliceCol` value, then
+    * writes `outDir/catalog` — the same loop as [[ingest]]. */
+  def ingestJson(spark: SparkSession, jsonl: DataFrame, jsonCol: String,
+                 sliceCol: Column, outDir: String,
+                 metadata: Seq[(String, Column)] = Nil,
+                 options: JsonPipeline.Options = JsonPipeline.Options(),
+                 tagsFor: String => Seq[String] = _ => Nil): Unit =
+    ingestSlices(spark, jsonl, sliceCol, outDir, tagsFor, Json) { (rows, dir) =>
+      JsonPipeline.route(spark, rows, jsonCol, dir, metadata, options)
+    }
+
+  private def ingestSlices(spark: SparkSession, rows: DataFrame, sliceCol: Column,
+                           outDir: String, tagsFor: String => Seq[String],
+                           kind: Kind)(route: (DataFrame, String) => Unit): Unit = {
     // a null slice value (e.g. a null ts through a date-truncation slice)
     // must not NPE the sort or silently match no rows in the === filter
     // below — it routes to its own named archive, losslessly
-    val sliced = turns.withColumn("_slice",
+    val sliced = rows.withColumn("_slice",
       coalesce(sliceCol.cast("string"), lit("null")))
     val slices = sliced.select("_slice").distinct()
       .collect().map(_.getString(0)).sorted
-    slices.foreach { sl =>
-      ClpPipeline.run(spark, sliced.filter(col("_slice") === sl).drop("_slice"),
-        ClpPipeline.Config(s"$outDir/archives/arch_$sl",
-          maxSinks = maxSinks, saltParts = saltParts))
-    }
+    slices.foreach(sl => route(sliced.filter(col("_slice") === sl).drop("_slice"),
+      s"$outDir/archives/arch_$sl"))
     // snapshot 1 is the empty catalog (creates the table + schema); each
-    // archive then registers itself through appendEntry — an empty corpus
-    // still commits a valid catalog, matching the batch pipeline's
-    // empty-input contract (search over it answers zero rows, not an error)
+    // archive then registers itself — an empty corpus still commits a valid
+    // catalog, matching the batch pipeline's empty-input contract (search
+    // over it answers zero rows, not an error)
     LakeTable.overwrite(spark, s"$outDir/catalog", emptyCatalog(spark))
-    slices.foreach(sl => appendEntry(spark, outDir, s"arch_$sl", tagsFor(sl)))
+    slices.foreach(sl => register(spark, outDir, s"arch_$sl", tagsFor(sl), kind))
   }
 
-  /** The zero-row catalog frame that seeds a new fleet (snapshot 1, defines
-    * the table schema). ONE definition — `appendEntry`/`appendJsonEntry`
-    * gate their optional columns on what the committed catalog carries, so
-    * a literal drifting at one ingest site would silently create catalogs
-    * locked out of the corresponding prune forever. */
-  def emptyCatalog(spark: SparkSession): DataFrame = spark.range(0).select(
-    lit("").as("archive_id"), lit(null).cast("timestamp").as("begin_ts"),
-    lit(null).cast("timestamp").as("end_ts"), lit(0L).as("n_messages"),
-    lit(null).cast("array<bigint>").as("dict_bloom"),
-    lit(null).cast("array<string>").as("tags"),
-    lit(null).cast("array<string>").as("columns"))
+  /** What registration needs from one archive kind: the archive's
+    * (begin_ts, end_ts, n_messages) rolled up from its own metadata tables
+    * (one row, no data scan), and its summary column with the value it
+    * registers there. */
+  private final case class Kind(rollup: (SparkSession, String) => DataFrame,
+                                summaryCol: String,
+                                summary: (SparkSession, String) => Column)
 
-  /** Register one finished archive in the fleet catalog: roll its ts bounds
-    * + message count up from its own `sink_stats` (metadata-only, no data
-    * scan) and commit the row as a [[LakeTable]] append — the registration
-    * is ATOMIC (a crashed registration is invisible, rerun-safe) and the
-    * catalog is snapshot-versioned, so a fleet search can pin the set of
-    * archives as-of a snapshot while ingest keeps registering new ones.
-    * This is the production path (the reference's scheduler registers each
-    * compression job's archive in the metadata DB as it completes);
-    * [[ingest]]'s per-slice loop is the test-harness shape. */
-  def appendEntry(spark: SparkSession, outDir: String, archiveId: String,
-                  tags: Seq[String] = Nil): Long = {
-    val base = spark.read.parquet(s"$outDir/archives/$archiveId/sink_stats")
+  private val Text = Kind(
+    (spark, arch) => spark.read.parquet(s"$arch/sink_stats")
       .agg(min(col("min_ts")).as("begin_ts"), max(col("max_ts")).as("end_ts"),
-        sum(col("n_rows")).cast("long").as("n_messages"))
-      .withColumn("archive_id", lit(archiveId))
-      .select("archive_id", "begin_ts", "end_ts", "n_messages")
-    // dictionary-token Bloom summary (see [[DictBloom]]) and user tags:
-    // registered only when the committed catalog carries the column — a
-    // catalog created before either existed keeps appending its own schema
-    // (the lake shim refuses silent drift), it just never fleet-prunes by
-    // token / is never tag-addressable
+        sum(col("n_rows")).cast("long").as("n_messages")),
+    "dict_bloom",
+    // an empty archive has no var_dict: no summary, never token-pruned
+    (spark, arch) =>
+      try typedLit(DictBloom.build(spark.read.parquet(s"$arch/var_dict"), "value").toSeq)
+      catch { case _: org.apache.spark.sql.AnalysisException => lit(null) })
+
+  private val Json = Kind(
+    (spark, arch) => spark.read.parquet(s"$arch/schemas")
+      .agg(timestamp_millis(min(col("min_ts"))).as("begin_ts"),
+        timestamp_millis(max(col("max_ts"))).as("end_ts"),
+        coalesce(sum(col("n_records")), lit(0L)).cast("long").as("n_messages")),
+    "columns",
+    (spark, arch) => typedLit(jsonArchiveColumns(spark, arch)))
+
+  /** The MPT leaf summary of one JSON archive's SEARCH FRAMES: per schema,
+    * exactly the StructType [[JsonPipeline.kqlSearch]] compiles against
+    * (metadata `$`-columns + `log_event_idx` + the derived record schema),
+    * walked by [[graft.search.KqlCompiler.leafSummary]] — so the stored
+    * summary and the real per-archive resolution can never drift. */
+  private def jsonArchiveColumns(spark: SparkSession, archDir: String): Seq[String] = {
+    import org.apache.spark.sql.types._
+    val metaFields =
+      try spark.read.parquet(s"$archDir/records").schema.fields.toSeq
+        .filter(_.name.startsWith("$"))
+      catch { case _: org.apache.spark.sql.AnalysisException => Nil } // empty archive
+    val schemaJsons =
+      spark.read.parquet(s"$archDir/table_schemas").select("spark_schema")
+        .collect().map(_.getString(0)).toSeq
+    schemaJsons.flatMap { js =>
+      val st = DataType.fromJson(js).asInstanceOf[StructType]
+      graft.search.KqlCompiler.leafSummary(StructType(
+        metaFields ++ Seq(StructField("log_event_idx", LongType)) ++ st.fields))
+    }.distinct.sorted
+  }
+
+  /** Catalog columns after (archive_id, begin_ts, end_ts, n_messages), in
+    * table order. Each arrived after the first catalogs were written, so a
+    * registration writes one only where the committed catalog carries it. */
+  private val OptionalCols =
+    Seq("dict_bloom" -> "array<bigint>", "tags" -> "array<string>",
+      "columns" -> "array<string>")
+
+  /** The zero-row catalog frame that seeds a new fleet (snapshot 1, defines
+    * the table schema). ONE definition — registration gates its optional
+    * columns on what the committed catalog carries, so a literal drifting at
+    * one ingest site would silently create catalogs locked out of the
+    * corresponding prune forever. */
+  def emptyCatalog(spark: SparkSession): DataFrame = spark.range(0).select(Seq(
+    lit("").as("archive_id"), lit(null).cast("timestamp").as("begin_ts"),
+    lit(null).cast("timestamp").as("end_ts"), lit(0L).as("n_messages")) ++
+    OptionalCols.map { case (c, t) => lit(null).cast(t).as(c) }: _*)
+
+  /** Register one finished text archive in the fleet catalog. The
+    * registration is ATOMIC (a [[LakeTable]] append: a crashed registration
+    * is invisible, rerun-safe) and the catalog is snapshot-versioned, so a
+    * fleet search can pin the set of archives as-of a snapshot while ingest
+    * keeps registering new ones. This is the production path (the
+    * reference's scheduler registers each compression job's archive in the
+    * metadata DB as it completes); [[ingest]]'s per-slice loop is the
+    * test-harness shape. */
+  def appendEntry(spark: SparkSession, outDir: String, archiveId: String,
+                  tags: Seq[String] = Nil): Long =
+    register(spark, outDir, archiveId, tags, Text)
+
+  /** Register one finished JSON archive — [[appendEntry]] for JSON. */
+  def appendJsonEntry(spark: SparkSession, outDir: String, archiveId: String,
+                      tags: Seq[String] = Nil): Long =
+    register(spark, outDir, archiveId, tags, Json)
+
+  private def register(spark: SparkSession, outDir: String, archiveId: String,
+                       tags: Seq[String], kind: Kind): Long = {
+    val arch = s"$outDir/archives/$archiveId"
+    // a catalog created before an optional column existed keeps appending
+    // its own schema (the lake shim refuses silent drift); it just never
+    // prunes by that summary / is never tag-addressable
     val catCols = LakeTable.read(spark, s"$outDir/catalog").columns.toSet
-    var entry = base
-    if (catCols.contains("dict_bloom")) {
-      val bloom =
-        try Some(DictBloom.build(
-          spark.read.parquet(s"$outDir/archives/$archiveId/var_dict"), "value"))
-        catch { case _: org.apache.spark.sql.AnalysisException => None }
-      entry = entry.withColumn("dict_bloom",
-        bloom.map(b => typedLit(b.toSeq)).getOrElse(lit(null))
-          .cast("array<bigint>"))
+    val base = kind.rollup(spark, arch).withColumn("archive_id", lit(archiveId))
+      .select("archive_id", "begin_ts", "end_ts", "n_messages")
+    val entry = OptionalCols.filter(c => catCols(c._1)).foldLeft(base) {
+      case (df, (c, t)) =>
+        val v =
+          if (c == kind.summaryCol) kind.summary(spark, arch)
+          else if (c == "tags" && tags.nonEmpty) typedLit(tags)
+          else lit(null) // no tags, or the other kind's summary (never prunes)
+        df.withColumn(c, v.cast(t))
     }
-    if (catCols.contains("tags"))
-      entry = entry.withColumn("tags",
-        (if (tags.isEmpty) lit(null) else typedLit(tags)).cast("array<string>"))
-    if (catCols.contains("columns"))
-      // text archives carry no MPT; the column-set prune never applies
-      entry = entry.withColumn("columns", lit(null).cast("array<string>"))
     LakeTable.append(spark, s"$outDir/catalog", entry)
   }
 
@@ -118,39 +190,31 @@ object ClpCatalog {
       .select("archive_id", "begin_ts", "end_ts").collect()
       .map(r => (r.getString(0), r.getTimestamp(1), r.getTimestamp(2)))
 
-  /** Archive ids whose [begin, end] intersects [tsLo, tsHi] — decided from
-    * the catalog alone, before any archive directory is opened. */
-  def admissibleArchives(spark: SparkSession, outDir: String,
-                         tsLo: Option[java.sql.Timestamp],
-                         tsHi: Option[java.sql.Timestamp],
-                         asOf: Option[Long] = None): Seq[String] =
-    entries(spark, outDir, asOf).collect {
-      // null bounds (an archive whose turns all lack timestamps) cannot be
-      // pruned by time — such an archive is always admissible, same as the
-      // sink-level rule in ClpSearch
-      case (id, b, e)
-          if b == null || e == null ||
-            (tsLo.forall(lo => !e.before(lo)) && tsHi.forall(hi => !b.after(hi))) => id
-    }.toSeq
+  /** The one timestamp-window rule, at every level that keeps [min, max]
+    * bounds: archives in a fleet (here), sinks in a text archive
+    * ([[graft.search.ClpSearch]]) and schemas in a JSON archive
+    * ([[JsonPipeline.kqlSearch]]). True iff [min, max] overlaps [lo, hi]
+    * (inclusive; an absent side is unbounded). Missing bounds (no
+    * timestamped row) cannot be placed in time and admit — except with
+    * `pruneNullBounds` under a bounded window: clp-s then injects the
+    * timestamp predicate into the survivors (AddTimestampConditions), which
+    * no untimed row passes, so the JSON schema prune drops them up front. */
+  private[graft] def tsOverlaps[T](min: Option[T], max: Option[T],
+                                   lo: Option[T], hi: Option[T],
+                                   pruneNullBounds: Boolean = false)(
+                                   implicit ord: Ordering[T]): Boolean =
+    (min, max) match {
+      case (Some(mn), Some(mx)) => lo.forall(ord.lteq(_, mx)) && hi.forall(ord.gteq(_, mn))
+      case _ => !(pruneNullBounds && (lo.isDefined || hi.isDefined))
+    }
 
-  /** Catalog-level token + tag pruning on top of the ts prune: archives
-    * whose [begin, end] intersects the window AND whose dictionary Bloom
-    * summary admits the query (see [[DictBloom.admits]]) AND — when `tags`
-    * is given — that carry at least one of the requested tags. An archive
-    * with no Bloom summary (null column, pre-summary catalog, empty archive
-    * with no var_dict) is never token-pruned — only a definitive Bloom miss
-    * on a required exact dictionary token prunes. The tag rule is the
-    * reference's scheduler filter (`query_scheduler.py:417-419`: archive id
-    * IN archives tagged with ANY requested tag — an untagged archive is
-    * EXCLUDED by a tag-scoped search, it can only be reached untagged).
-    * Decided from catalog metadata alone; no archive directory opens for a
-    * pruned archive. */
   /** The last fleet-prune decision: catalog size vs archives admitted —
     * the reference's scheduler logs the same numbers when it narrows the
     * archive list for a query (`query_scheduler.py:417-419` tag/time
-    * filters). [[search]]/[[searchBatched]] stamp it into the Spark job
-    * description, so the prune ratio rides the lineage of every job the
-    * search triggers (UI / event logs); tests read it directly. */
+    * filters). Every admission records it; [[search]], [[searchBatched]]
+    * and [[searchKql]] stamp it into the Spark job description, so the
+    * prune ratio rides the lineage of every job the search triggers (UI /
+    * event logs); tests read it directly. */
   final case class PruneStats(total: Int, admissible: Int) {
     def pruned: Int = total - admissible
     def ratio: Double = if (total == 0) 0.0 else pruned.toDouble / total
@@ -166,36 +230,66 @@ object ClpCatalog {
   }
   private[graft] def lastPruneStats: Option[PruneStats] = lastPruneStatsTl.get()
 
+  /** Archive ids whose [begin, end] intersects [tsLo, tsHi] — decided from
+    * the catalog alone, before any archive directory is opened. */
+  def admissibleArchives(spark: SparkSession, outDir: String,
+                         tsLo: Option[java.sql.Timestamp],
+                         tsHi: Option[java.sql.Timestamp],
+                         asOf: Option[Long] = None): Seq[String] =
+    admit(spark, outDir, asOf, tsLo, tsHi, None, None)
+
+  /** Archives a text query must open: the ts window, the tags and the
+    * dictionary Bloom summary (see [[DictBloom.admits]]) — only a definitive
+    * Bloom miss on a required exact dictionary token prunes. */
   def admissibleArchivesFor(spark: SparkSession, outDir: String, query: String,
                             caseSensitive: Boolean,
                             tsLo: Option[java.sql.Timestamp],
                             tsHi: Option[java.sql.Timestamp],
                             asOf: Option[Long] = None,
-                            tags: Option[Seq[String]] = None): Seq[String] = {
+                            tags: Option[Seq[String]] = None): Seq[String] =
+    admit(spark, outDir, asOf, tsLo, tsHi, tags, Some(Text.summaryCol -> ((r: Row, i: Int) =>
+      DictBloom.admits(r.getSeq[Long](i).toArray, query, caseSensitive))))
+
+  /** Archives a KQL query must open: the ts window, the tags and the
+    * column-set summary ([[graft.search.KqlCompiler.couldMatchLeaves]]) —
+    * only a definitive structural miss (a required filter whose pattern
+    * resolves to no leaf under KqlCompiler's own namespace + wildcard path
+    * matching) prunes. `tsLo`/`tsHi` are epoch millis, matching
+    * [[JsonPipeline.kqlSearch]]. */
+  def admissibleArchivesForKql(spark: SparkSession, outDir: String, kql: String,
+                               tsLo: Option[Long], tsHi: Option[Long],
+                               asOf: Option[Long] = None,
+                               tags: Option[Seq[String]] = None): Seq[String] = {
+    val ast = graft.search.Kql.parseOrThrow(kql)
+    admit(spark, outDir, asOf, tsLo.map(new java.sql.Timestamp(_)),
+      tsHi.map(new java.sql.Timestamp(_)), tags, Some(Json.summaryCol -> ((r: Row, i: Int) =>
+        graft.search.KqlCompiler.couldMatchLeaves(ast, r.getSeq[String](i)))))
+  }
+
+  /** The one admission rule, decided from catalog metadata alone (no
+    * archive directory opens for a pruned archive): an archive is admitted
+    * iff its bounds overlap the window ([[tsOverlaps]]), it carries at least
+    * one requested tag when `tags` is given, and its kind's `summary`
+    * admits the query. The tag rule is the reference's scheduler filter
+    * (`query_scheduler.py:417-419`: archive id IN archives tagged with ANY
+    * requested tag) — an untagged archive, or any archive of a catalog
+    * without tags, is EXCLUDED by a tag-scoped search. A null or absent
+    * summary (the other kind's archive, a catalog older than the column, an
+    * empty archive) never prunes. Records [[PruneStats]]. */
+  private def admit(spark: SparkSession, outDir: String, asOf: Option[Long],
+                    tsLo: Option[java.sql.Timestamp], tsHi: Option[java.sql.Timestamp],
+                    tags: Option[Seq[String]],
+                    summary: Option[(String, (Row, Int) => Boolean)]): Seq[String] = {
     val cat = LakeTable.read(spark, s"$outDir/catalog", asOf)
-    val cols = cat.columns.toSet
-    val hasBloom = cols.contains("dict_bloom")
-    val hasTags = cols.contains("tags")
-    val selected = Seq("archive_id", "begin_ts", "end_ts") ++
-      (if (hasBloom) Seq("dict_bloom") else Nil) ++
-      (if (hasTags) Seq("tags") else Nil)
-    val bloomAt = selected.indexOf("dict_bloom")
-    val tagsAt = selected.indexOf("tags")
-    val rows = cat.select(selected.map(col): _*).collect().toSeq
+    def optional(c: String) = if (cat.columns.contains(c)) col(c) else lit(null)
+    // (archive_id, begin_ts, end_ts, tags, summary): an absent column reads null
+    val rows = cat.select(col("archive_id"), col("begin_ts"), col("end_ts"),
+      optional("tags"), summary.fold(lit(null))(s => optional(s._1))).collect().toSeq
     val admitted = rows.collect {
-      case r if {
-        val (b, e) = (r.getTimestamp(1), r.getTimestamp(2))
-        val tsOk = b == null || e == null ||
-          (tsLo.forall(lo => !e.before(lo)) && tsHi.forall(hi => !b.after(hi)))
-        val bloomOk = bloomAt < 0 || r.isNullAt(bloomAt) ||
-          DictBloom.admits(r.getSeq[Long](bloomAt).toArray, query, caseSensitive)
-        val tagOk = tags match {
-          case None => true
-          case Some(req) => tagsAt >= 0 && !r.isNullAt(tagsAt) &&
-            r.getSeq[String](tagsAt).exists(req.contains)
-        }
-        tsOk && bloomOk && tagOk
-      } => r.getString(0)
+      case r if tsOverlaps(Option(r.getTimestamp(1)), Option(r.getTimestamp(2)), tsLo, tsHi) &&
+          tags.forall(req => !r.isNullAt(3) && r.getSeq[String](3).exists(req.contains)) &&
+          (r.isNullAt(4) || summary.get._2(r, 4)) =>
+        r.getString(0)
     }
     lastPruneStatsTl.set(Some(PruneStats(rows.size, admitted.size)))
     admitted
@@ -294,10 +388,10 @@ object ClpCatalog {
     retired
   }
 
-  /** Cross-archive search: catalog-pruned per-archive plans (timestamp
-    * window ∩ dictionary-Bloom token summary), one union — each branch runs
-    * the full encoded-domain lifecycle (dict probe → sink prune → encoded
-    * match → decode → verify) inside its own archive.
+  /** Cross-archive text search: catalog-pruned per-archive plans (timestamp
+    * window ∩ tags ∩ dictionary-Bloom token summary), one union — each branch
+    * runs the full encoded-domain lifecycle (dict probe → sink prune →
+    * encoded match → decode → verify) inside its own archive.
     *
     * Fan-out is BOUNDED: each admissible archive contributes one plan
     * branch, so a match-all query over a 10^4-archive fleet would otherwise
@@ -314,21 +408,78 @@ object ClpCatalog {
              tsHi: Option[java.sql.Timestamp] = None,
              asOf: Option[Long] = None,
              maxFanout: Int = 256,
-             tags: Option[Seq[String]] = None): DataFrame = {
-    val admissible =
-      admissibleArchivesFor(spark, outDir, query, caseSensitive, tsLo, tsHi, asOf, tags)
-    lastPruneStats.foreach(st =>
-      spark.sparkContext.setJobDescription(s"ClpCatalog.search($query): $st"))
-    require(admissible.size <= maxFanout,
-      s"query admits ${admissible.size} archives (> maxFanout=$maxFanout); " +
-        "narrow the query with a time range or more specific tokens, or use " +
-        "ClpCatalog.searchBatched for a bounded-plan full-fleet scan")
-    if (admissible.isEmpty) graft.search.ClpSearch.emptyResults(spark)
-    else parallelPlans(spark, admissible) { id =>
-      new graft.search.ClpSearch(spark, s"$outDir/archives/$id")
-        .search(query, caseSensitive, tsLo, tsHi)
-    }.reduce(_ unionAll _)
+             tags: Option[Seq[String]] = None): DataFrame =
+    fanOut(spark, s"ClpCatalog.search($query)",
+      admissibleArchivesFor(spark, outDir, query, caseSensitive, tsLo, tsHi, asOf, tags),
+      maxFanout, "a time range or more specific tokens, or use " +
+        "ClpCatalog.searchBatched for a bounded-plan full-fleet scan")(
+      graft.search.ClpSearch.emptyResults(spark), _.reduce(_ unionAll _))(
+      textArchive(spark, outDir, query, caseSensitive, tsLo, tsHi))
+
+  /** Fleet KQL search over JSON archives: one [[JsonPipeline.kqlSearch]] per
+    * admissible archive (each with its own schema-pruned per-schema plans),
+    * widened into one result by the same rule that widens schemas within an
+    * archive ([[JsonPipeline.widen]]). Fan-out bounded exactly like
+    * [[search]].
+    *
+    * An all-pruned query answers an empty frame typed from catalog metadata
+    * alone (no archive dir opens — the point of the prune): each archive's
+    * stored leaf summary rebuilds its search-frame schema, `selectCols`
+    * resolve through the SAME projection walk the real path uses, and the
+    * per-archive schemas widen under the same rule — so unioning it with a
+    * non-empty window's result of the same query stays type-compatible.
+    * Superset semantics: the universe is ALL cataloged archives (which
+    * archives a non-empty search would have admitted is unknowable here).
+    * Catalogs without leaf summaries fall back to all-string `selectCols`. */
+  def searchKql(spark: SparkSession, outDir: String, kql: String,
+                selectCols: Seq[String],
+                tsLo: Option[Long] = None, tsHi: Option[Long] = None,
+                asOf: Option[Long] = None,
+                maxFanout: Int = 256,
+                tags: Option[Seq[String]] = None): DataFrame = {
+    def fields(df: DataFrame) = df.schema.fields.toSeq.map(f => f.name -> f.dataType)
+    def allPruned: DataFrame = {
+      val cat = LakeTable.read(spark, s"$outDir/catalog", asOf)
+      val summaries =
+        if (!cat.columns.contains("columns")) Nil
+        else cat.select("columns").collect().toSeq.collect {
+          case r if !r.isNullAt(0) => graft.search.KqlCompiler.resolveProjection(
+            graft.search.KqlCompiler.schemaFromLeafSummary(r.getSeq[String](0)),
+            selectCols)
+        }
+      JsonPipeline.widen(spark, selectCols, summaries)
+    }
+    fanOut(spark, s"ClpCatalog.searchKql($kql)",
+      admissibleArchivesForKql(spark, outDir, kql, tsLo, tsHi, asOf, tags),
+      maxFanout, "a time range, tags, or more specific columns")(
+      allPruned,
+      parts => JsonPipeline.widen(spark, selectCols, parts.map(fields),
+        parts.map(p => p -> fields(p))))(
+      id => JsonPipeline.kqlSearch(spark, s"$outDir/archives/$id", kql, selectCols, tsLo, tsHi))
   }
+
+  /** The search step every archive kind shares: stamp the prune decision
+    * into the job description, refuse past `maxFanout`, then answer `empty`
+    * or the `union` of the per-archive plans. */
+  private def fanOut(spark: SparkSession, label: String, admitted: Seq[String],
+                     maxFanout: Int, narrowHint: String)(
+                     empty: => DataFrame, union: Seq[DataFrame] => DataFrame)(
+                     perArchive: String => DataFrame): DataFrame = {
+    stampPrune(spark, label)
+    require(admitted.size <= maxFanout,
+      s"query admits ${admitted.size} archives (> maxFanout=$maxFanout); " +
+        s"narrow the query with $narrowHint")
+    if (admitted.isEmpty) empty else union(parallelPlans(spark, admitted)(perArchive))
+  }
+
+  private def stampPrune(spark: SparkSession, label: String): Unit =
+    lastPruneStats.foreach(st => spark.sparkContext.setJobDescription(s"$label: $st"))
+
+  private def textArchive(spark: SparkSession, outDir: String, query: String,
+                          caseSensitive: Boolean, tsLo: Option[java.sql.Timestamp],
+                          tsHi: Option[java.sql.Timestamp])(id: String): DataFrame =
+    new graft.search.ClpSearch(spark, s"$outDir/archives/$id")
+      .search(query, caseSensitive, tsLo, tsHi)
 
   /** Builds per-archive plan branches CONCURRENTLY, preserving order. Plan
     * construction is the fleet search's measured fixed cost — each branch
@@ -379,225 +530,17 @@ object ClpCatalog {
       java.nio.file.Files.createTempDirectory("graft-fleet-search").toString)
     val admissible =
       admissibleArchivesFor(spark, outDir, query, caseSensitive, tsLo, tsHi, asOf, tags)
-    lastPruneStats.foreach(st =>
-      spark.sparkContext.setJobDescription(s"ClpCatalog.searchBatched($query): $st"))
+    stampPrune(spark, s"ClpCatalog.searchBatched($query)")
     // seed the dir with the (possibly empty) result schema so an all-pruned
     // fleet still answers an empty frame, not a missing-path error
     graft.search.ClpSearch.emptyResults(spark)
       .write.mode("overwrite").parquet(dir)
     admissible.grouped(batchSize).foreach { batch =>
-      parallelPlans(spark, batch) { id =>
-        new graft.search.ClpSearch(spark, s"$outDir/archives/$id")
-          .search(query, caseSensitive, tsLo, tsHi)
-      }.reduce(_ unionAll _)
+      parallelPlans(spark, batch)(textArchive(spark, outDir, query, caseSensitive, tsLo, tsHi))
+        .reduce(_ unionAll _)
         .write.mode("append").parquet(dir)
     }
     spark.read.parquet(dir)
-  }
-
-  // ------------------------------------------------- JSON-archive fleets
-  // The same catalog over clp_s-style JSON archives ([[JsonPipeline]]), with
-  // one extra per-archive summary: the MPT leaf set (`columns`, escaped
-  // `path:type` strings from [[graft.search.KqlCompiler.leafSummary]]) — the
-  // reference's external-SQL column index
-  // (`clp_s/indexer/IndexManager.cpp` registers each archive's column
-  // name/type pairs in MySQL so an external planner skips archives lacking a
-  // queried column). A fleet KQL search prunes on it BEFORE any archive dir
-  // opens, with the same conservatism as the Bloom rule: only a definitive
-  // structural miss (a required filter whose pattern resolves to no leaf
-  // under KqlCompiler's own namespace + wildcard path matching) prunes.
-
-  /** Routes `jsonl` into one JSON archive per distinct `sliceCol` value and
-    * registers each in the fleet catalog with ts bounds + MPT column set —
-    * the JSON twin of [[ingest]] (same test-harness loop caveat). */
-  def ingestJson(spark: SparkSession, jsonl: DataFrame, jsonCol: String,
-                 sliceCol: Column, outDir: String,
-                 metadata: Seq[(String, Column)] = Nil,
-                 options: JsonPipeline.Options = JsonPipeline.Options(),
-                 tagsFor: String => Seq[String] = _ => Nil): Unit = {
-    val sliced = jsonl.withColumn("_slice",
-      coalesce(sliceCol.cast("string"), lit("null")))
-    val slices = sliced.select("_slice").distinct()
-      .collect().map(_.getString(0)).sorted
-    slices.foreach { sl =>
-      JsonPipeline.route(spark,
-        sliced.filter(col("_slice") === sl).drop("_slice"), jsonCol,
-        s"$outDir/archives/arch_$sl", metadata, options)
-    }
-    LakeTable.overwrite(spark, s"$outDir/catalog", emptyCatalog(spark))
-    slices.foreach(sl => appendJsonEntry(spark, outDir, s"arch_$sl", tagsFor(sl)))
-  }
-
-  /** The MPT leaf summary of one JSON archive's SEARCH FRAMES: per schema,
-    * exactly the StructType [[JsonPipeline.kqlSearch]] compiles against
-    * (metadata `$`-columns + `log_event_idx` + the derived record schema),
-    * walked by [[graft.search.KqlCompiler.leafSummary]] — so the stored
-    * summary and the real per-archive resolution can never drift. */
-  private def jsonArchiveColumns(spark: SparkSession, archDir: String): Seq[String] = {
-    import org.apache.spark.sql.types._
-    val metaFields =
-      try spark.read.parquet(s"$archDir/records").schema.fields.toSeq
-        .filter(_.name.startsWith("$"))
-      catch { case _: org.apache.spark.sql.AnalysisException => Nil } // empty archive
-    val schemaJsons =
-      spark.read.parquet(s"$archDir/table_schemas").select("spark_schema")
-        .collect().map(_.getString(0)).toSeq
-    schemaJsons.flatMap { js =>
-      val st = DataType.fromJson(js).asInstanceOf[StructType]
-      graft.search.KqlCompiler.leafSummary(StructType(
-        metaFields ++ Seq(StructField("log_event_idx", LongType)) ++ st.fields))
-    }.distinct.sorted
-  }
-
-  /** Register one finished JSON archive: ts bounds + message count rolled up
-    * from its own schema catalog (metadata-only), plus the MPT column-set
-    * summary — the JSON twin of [[appendEntry]]. */
-  def appendJsonEntry(spark: SparkSession, outDir: String, archiveId: String,
-                      tags: Seq[String] = Nil): Long = {
-    val arch = s"$outDir/archives/$archiveId"
-    val base = spark.read.parquet(s"$arch/schemas")
-      .agg(timestamp_millis(min(col("min_ts"))).as("begin_ts"),
-        timestamp_millis(max(col("max_ts"))).as("end_ts"),
-        coalesce(sum(col("n_records")), lit(0L)).cast("long").as("n_messages"))
-      .withColumn("archive_id", lit(archiveId))
-      .select("archive_id", "begin_ts", "end_ts", "n_messages")
-    val catCols = LakeTable.read(spark, s"$outDir/catalog").columns.toSet
-    var entry = base
-    if (catCols.contains("dict_bloom"))
-      entry = entry.withColumn("dict_bloom", lit(null).cast("array<bigint>"))
-    if (catCols.contains("tags"))
-      entry = entry.withColumn("tags",
-        (if (tags.isEmpty) lit(null) else typedLit(tags)).cast("array<string>"))
-    if (catCols.contains("columns")) {
-      val cols = jsonArchiveColumns(spark, arch)
-      entry = entry.withColumn("columns", typedLit(cols).cast("array<string>"))
-    }
-    LakeTable.append(spark, s"$outDir/catalog", entry)
-  }
-
-  /** Archives a KQL query must open: ts window ∩ tags ∩ column-set summary
-    * ([[graft.search.KqlCompiler.couldMatchLeaves]]). An archive with no
-    * summary (null column, pre-summary catalog) is never column-pruned.
-    * Decided from catalog metadata alone. `tsLo`/`tsHi` are epoch millis,
-    * matching [[JsonPipeline.kqlSearch]]. */
-  def admissibleArchivesForKql(spark: SparkSession, outDir: String, kql: String,
-                               tsLo: Option[Long], tsHi: Option[Long],
-                               asOf: Option[Long] = None,
-                               tags: Option[Seq[String]] = None): Seq[String] = {
-    val ast = graft.search.Kql.parse(kql) match {
-      case Right(a) => a
-      case Left(err) => throw new IllegalArgumentException(s"KQL parse error: $err")
-    }
-    val loTs = tsLo.map(ms => new java.sql.Timestamp(ms))
-    val hiTs = tsHi.map(ms => new java.sql.Timestamp(ms))
-    val cat = LakeTable.read(spark, s"$outDir/catalog", asOf)
-    val cols = cat.columns.toSet
-    val selected = Seq("archive_id", "begin_ts", "end_ts") ++
-      (if (cols.contains("tags")) Seq("tags") else Nil) ++
-      (if (cols.contains("columns")) Seq("columns") else Nil)
-    val tagsAt = selected.indexOf("tags")
-    val colsAt = selected.indexOf("columns")
-    cat.select(selected.map(col): _*).collect().toSeq.collect {
-      case r if {
-        val (b, e) = (r.getTimestamp(1), r.getTimestamp(2))
-        val tsOk = b == null || e == null ||
-          (loTs.forall(lo => !e.before(lo)) && hiTs.forall(hi => !b.after(hi)))
-        val tagOk = tags match {
-          case None => true
-          case Some(req) => tagsAt >= 0 && !r.isNullAt(tagsAt) &&
-            r.getSeq[String](tagsAt).exists(req.contains)
-        }
-        val colOk = colsAt < 0 || r.isNullAt(colsAt) ||
-          graft.search.KqlCompiler.couldMatchLeaves(ast, r.getSeq[String](colsAt))
-        tsOk && tagOk && colOk
-      } => r.getString(0)
-    }
-  }
-
-  /** Union results across archives with [[JsonPipeline.kqlSearch]]'s own
-    * projection-widening rule (name-sharing columns with irreconcilable
-    * types: numeric→double, else string; struct/array stringified as JSON;
-    * archive-absent columns null-filled) — first-seen column order. */
-  private def widenUnion(parts: Seq[DataFrame]): DataFrame = {
-    import org.apache.spark.sql.types._
-    val outTypes = scala.collection.mutable.LinkedHashMap.empty[String, DataType]
-    parts.foreach(_.schema.fields.foreach { f =>
-      outTypes.get(f.name) match {
-        case None => outTypes(f.name) = f.dataType
-        case Some(prev) if prev == f.dataType => ()
-        case Some(prev) =>
-          val bothNumeric = Seq(prev, f.dataType).forall(t =>
-            t == LongType || t == DoubleType || t.isInstanceOf[DecimalType])
-          outTypes(f.name) = if (bothNumeric) DoubleType else StringType
-      }
-    })
-    val aligned = parts.map { df =>
-      val have = df.schema.fields.map(f => f.name -> f.dataType).toMap
-      df.select(outTypes.toSeq.map { case (nm, dt) =>
-        have.get(nm) match {
-          case None => lit(null).cast(dt).as(nm)
-          case Some(src) =>
-            val c = col(graft.search.KqlCompiler.quoteName(nm))
-            val cast =
-              if (src == dt) c
-              else if (dt == StringType && (src.isInstanceOf[StructType] ||
-                src.isInstanceOf[ArrayType])) to_json(c)
-              else c.cast(dt)
-            cast.as(nm)
-        }
-      }: _*)
-    }
-    aligned.reduce(_ unionAll _)
-  }
-
-  /** Fleet KQL search over JSON archives: column-set + ts + tag pruning from
-    * catalog metadata, then one [[JsonPipeline.kqlSearch]] per admissible
-    * archive (each with its own schema-pruned per-schema plans), widened into
-    * one result. Fan-out bounded exactly like [[search]]. */
-  def searchKql(spark: SparkSession, outDir: String, kql: String,
-                selectCols: Seq[String],
-                tsLo: Option[Long] = None, tsHi: Option[Long] = None,
-                asOf: Option[Long] = None,
-                maxFanout: Int = 256,
-                tags: Option[Seq[String]] = None): DataFrame = {
-    val admissible =
-      admissibleArchivesForKql(spark, outDir, kql, tsLo, tsHi, asOf, tags)
-    require(admissible.size <= maxFanout,
-      s"query admits ${admissible.size} archives (> maxFanout=$maxFanout); " +
-        "narrow the query with a time range, tags, or more specific columns")
-    if (admissible.isEmpty) {
-      import org.apache.spark.sql.types._
-      // type the empty frame from catalog metadata alone (no archive dir
-      // opens — the point of the prune): each archive's stored leaf summary
-      // rebuilds its search-frame schema, selectCols resolve through the
-      // SAME projection walk the real path uses, and per-archive schemas
-      // widen under the same rule — so unioning this frame with a
-      // non-empty window's result of the same query stays type-compatible.
-      // Superset semantics: the universe is ALL cataloged archives (which
-      // archives a non-empty search would have admitted is unknowable
-      // here). Pre-summary catalogs fall back to all-string selectCols.
-      val cat = LakeTable.read(spark, s"$outDir/catalog", asOf)
-      val parts =
-        if (!cat.columns.contains("columns")) Nil
-        else cat.select("columns").collect().toSeq.collect {
-          case r if !r.isNullAt(0) =>
-            val schema = graft.search.KqlCompiler
-              .schemaFromLeafSummary(r.getSeq[String](0))
-            val resolved =
-              graft.search.KqlCompiler.resolveProjection(schema, selectCols)
-            spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              StructType(resolved.map { case (nm, dt) => StructField(nm, dt) }))
-        }.filter(_.schema.fields.nonEmpty)
-      if (parts.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(selectCols.filterNot(_.contains("*"))
-            .map(c => StructField(c, StringType))))
-      else widenUnion(parts)
-    } else widenUnion(parallelPlans(spark, admissible)(id =>
-      JsonPipeline.kqlSearch(spark, s"$outDir/archives/$id", kql, selectCols,
-        tsLo, tsHi)))
   }
 
   // ------------------------------------------------------------- datasets

@@ -153,12 +153,6 @@ object JsonPipeline {
       (descriptor, ts, shapes)
     }
 
-  /** Adds `descriptor` and `schema_id` columns derived from `jsonCol`. */
-  def withSchemaId(df: DataFrame, jsonCol: String): DataFrame =
-    df.withColumn("descriptor",
-        shapeUdf(None, structurizeArrays = false)(col(jsonCol)).getField("_1"))
-      .withColumn("schema_id", md5(col("descriptor")))
-
   final case class Result(nRecords: Long, nSchemas: Long)
 
   // ---- descriptor + shapes → Spark StructType (no inference pass) --------
@@ -459,65 +453,32 @@ object JsonPipeline {
   def kqlSearch(spark: SparkSession, outDir: String, kql: String,
                 selectCols: Seq[String],
                 tsLo: Option[Long] = None, tsHi: Option[Long] = None): DataFrame = {
-    val ast = graft.search.Kql.parse(kql) match {
-      case Right(a) => a
-      case Left(err) => throw new IllegalArgumentException(s"KQL parse error: $err")
-    }
-    val hasTsFilter = tsLo.isDefined || tsHi.isDefined
-
+    val ast = graft.search.Kql.parseOrThrow(kql)
     val fullCatalog = loadCatalog(spark, outDir)
     // an EMPTY archive wrote no record part files — nothing to read a schema
     // from; answer the typed empty result directly
-    if (fullCatalog.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(selectCols.filterNot(_.contains("*")).map(c => StructField(c, StringType))))
+    if (fullCatalog.isEmpty) return widen(spark, selectCols, Nil)
     val records = spark.read.parquet(s"$outDir/records")
     val metaCols = records.columns.filter(_.startsWith("$")).toSeq
     val metaFieldsOut = metaCols.map(records.schema(_))
 
-    /** Output (name, type) columns resolved + widened across `entries` —
-      * used both for the real union and for typing an empty result (so a
-      * plan-time-pruned query still returns the archive's column types). */
-    def outTypesFor(entries: Seq[CatalogEntry]): Seq[(String, DataType)] = {
-      val outTypes = scala.collection.mutable.LinkedHashMap.empty[String, DataType]
-      entries.foreach { e =>
-        graft.search.KqlCompiler
-          .resolveProjection(StructType(metaFieldsOut ++ e.sparkSchema.fields), selectCols)
-          .foreach { case (nm, dt) =>
-            outTypes.get(nm) match {
-              case None => outTypes(nm) = dt
-              case Some(prev) if prev == dt => ()
-              case Some(prev) =>
-                val bothNumeric = Seq(prev, dt).forall(t =>
-                  t == LongType || t == DoubleType || t.isInstanceOf[DecimalType])
-                outTypes(nm) = if (bothNumeric) DoubleType else StringType
-            }
-          }
-      }
-      outTypes.toSeq
-    }
-
-    def emptyResult: DataFrame = {
-      val resolved = outTypesFor(fullCatalog)
-      val fields =
-        if (resolved.nonEmpty) resolved.map { case (nm, dt) => StructField(nm, dt) }
-        else selectCols.filterNot(_.contains("*")).map(c => StructField(c, StringType))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(fields))
-    }
+    /** Each schema's projected (name, type) columns — they type both the
+      * real union and an empty result (so a plan-time-pruned query still
+      * returns the archive's column types). */
+    def projected(entries: Seq[CatalogEntry]): Seq[Seq[(String, DataType)]] =
+      entries.map(e => graft.search.KqlCompiler.resolveProjection(
+        StructType(metaFieldsOut ++ e.sparkSchema.fields), selectCols))
+    def emptyResult: DataFrame = widen(spark, selectCols, projected(fullCatalog))
 
     // plan-time timestamp-index pruning (EvaluateTimestampIndex) happens
     // BEFORE the records store is even opened — a fully-out-of-range query
     // (or a time-bounded query over an archive ingested without a timestamp
     // key, whose ranges are all null — AddTimestampConditions) compiles to
     // an empty local relation, no file scan at all
-    val catalog = fullCatalog.filter { e =>
-      !hasTsFilter ||
-        (e.minTs.isDefined && e.maxTs.isDefined &&
-          tsLo.forall(lo => e.maxTs.get >= lo) && tsHi.forall(hi => e.minTs.get <= hi))
-    }
+    val catalog = fullCatalog.filter(e =>
+      ClpCatalog.tsOverlaps(e.minTs, e.maxTs, tsLo, tsHi, pruneNullBounds = true))
     if (catalog.isEmpty) return emptyResult
-    if (hasTsFilter && !metaCols.contains("$_ts")) return emptyResult
+    if ((tsLo.isDefined || tsHi.isDefined) && !metaCols.contains("$_ts")) return emptyResult
 
     // range index, if the archive has one (metadata columns at ingest):
     // loaded driver-side (ingest-source scale) for plan-time `$`-filter
@@ -575,34 +536,65 @@ object JsonPipeline {
       }
     }
     if (frames.isEmpty) return emptyResult
+    val types = projected(frames.map(_._1))
+    if (types.forall(_.isEmpty)) return emptyResult
+    // Projection.cpp: resolve each pattern against each schema's columns;
+    // dotted names navigate into structs here (resolution source), and
+    // after the alias the output column is literally named with dots
+    widen(spark, selectCols, types,
+      frames.map { case (_, df) =>
+        df -> graft.search.KqlCompiler.resolveProjection(df.schema, selectCols) },
+      nm => col(nm.split('.').map(quoteName).mkString(".")))
+  }
 
-    // Projection.cpp: resolve each pattern against each schema's columns
-    val resolvedPerSchema: Seq[(DataFrame, Seq[(String, DataType)])] = frames.map {
-      case (_, df) =>
-        (df, graft.search.KqlCompiler.resolveProjection(df.schema, selectCols))
+  /** The one projection-widening rule, for schemas within an archive
+    * ([[kqlSearch]]) and archives within a fleet
+    * ([[ClpCatalog.searchKql]]): output columns in first-seen order over
+    * `types` (one (name, type) list per part); a name seen with two types
+    * widens to double when both are numeric, else to string. Each of
+    * `parts` (a frame plus its (name, type) columns, read through `ref`) is
+    * aligned to the output — struct/array values that widen to string
+    * become their JSON text, other mismatches cast, absent columns
+    * null-fill — and the parts union. With no parts the answer is the
+    * typed empty frame; with no output column at all, the literal
+    * `selectCols` typed as strings. */
+  private[pipeline] def widen(spark: SparkSession, selectCols: Seq[String],
+                              types: Seq[Seq[(String, DataType)]],
+                              parts: Seq[(DataFrame, Seq[(String, DataType)])] = Nil,
+                              ref: String => Column = nm => col(quoteName(nm))): DataFrame = {
+    val out = scala.collection.mutable.LinkedHashMap.empty[String, DataType]
+    types.flatten.foreach { case (nm, dt) =>
+      out.get(nm) match {
+        case None => out(nm) = dt
+        case Some(prev) if prev == dt => ()
+        case Some(prev) =>
+          val bothNumeric = Seq(prev, dt).forall(t =>
+            t == LongType || t == DoubleType || t.isInstanceOf[DecimalType])
+          out(nm) = if (bothNumeric) DoubleType else StringType
+      }
     }
-    val outCols = outTypesFor(frames.map(_._1))
-    if (outCols.isEmpty) return emptyResult
-
-    val parts = resolvedPerSchema.map { case (df, cols) =>
-      val have = cols.map(_._1).toSet
-      df.select(outCols.collect {
-        case (nm, dt) if have.contains(nm) =>
-          // dotted names navigate into structs here (resolution source);
-          // after the alias the output column is literally named with dots
-          val c = col(nm.split('.').map(quoteName).mkString("."))
-          val src = cols.find(_._1 == nm).get._2
-          val cast =
-            if (src == dt) c
-            else if (dt == StringType && (src.isInstanceOf[StructType] ||
-              src.isInstanceOf[ArrayType])) to_json(c)
-            else c.cast(dt)
-          cast.as(nm)
+    if (out.isEmpty || parts.isEmpty) {
+      val fields =
+        if (out.nonEmpty) out.toSeq.map { case (nm, dt) => StructField(nm, dt) }
+        else selectCols.filterNot(_.contains("*")).map(c => StructField(c, StringType))
+      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        StructType(fields))
+    }
+    parts.map { case (df, have) =>
+      df.select(out.toSeq.map { case (nm, dt) =>
+        have.collectFirst { case (`nm`, src) => src } match {
+          case None => lit(null).cast(dt).as(nm)
+          case Some(src) =>
+            val c = ref(nm)
+            val cast =
+              if (src == dt) c
+              else if (dt == StringType && (src.isInstanceOf[StructType] ||
+                src.isInstanceOf[ArrayType])) to_json(c)
+              else c.cast(dt)
+            cast.as(nm)
+        }
       }: _*)
-    }
-    // union with null-fill for schema-absent projected columns
-    parts.reduce(_.unionByName(_, allowMissingColumns = true))
-      .select(outCols.map { case (nm, _) => col(quoteName(nm)) }: _*)
+    }.reduce(_ unionAll _)
   }
 
   /**

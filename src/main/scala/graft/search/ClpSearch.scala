@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Wildcard
 import graft.functions.ClpFunctions._
-import graft.pipeline.{ClpPipeline, Dictionaries}
+import graft.pipeline.{ClpCatalog, ClpPipeline, Dictionaries}
 
 /**
  * Wildcard search over the routed tables — the `clg` lifecycle (SURVEY §3.1)
@@ -140,9 +140,7 @@ final class ClpSearch(spark: SparkSession, outDir: String,
     else sinkTsBounds.map(_.collect {
       // null bounds (a sink whose rows all lack timestamps) cannot be pruned
       // by time: always admissible — the per-row ts predicate still applies
-      case (sid, mn, mx)
-          if mn == null || mx == null ||
-            (tsLo.forall(lo => !mx.before(lo)) && tsHi.forall(hi => !mn.after(hi))) => sid
+      case (sid, mn, mx) if ClpCatalog.tsOverlaps(Option(mn), Option(mx), tsLo, tsHi) => sid
     }.toSet)
 
   /** Core: candidate rows for a query, in the encoded domain; `None` when the

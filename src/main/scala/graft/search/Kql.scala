@@ -117,6 +117,10 @@ object Kql {
       }
     }
 
+  /** [[parse]] for callers that refuse a bad query loudly. */
+  def parseOrThrow(query: String): Expr =
+    parse(query).fold(err => throw new IllegalArgumentException(s"KQL parse error: $err"), identity)
+
   private final class Parser(toks: Vector[Tok]) {
     var pos = 0
     private def peek: Option[Tok] = if (pos < toks.length) Some(toks(pos)) else None

@@ -475,8 +475,5 @@ object KqlCompiler {
 
   /** Parse + filter in one step. */
   def filter(df: DataFrame, kql: String): DataFrame =
-    Kql.parse(kql) match {
-      case Right(ast) => df.filter(compile(ast, df.schema))
-      case Left(err) => throw new IllegalArgumentException(s"KQL parse error: $err")
-    }
+    df.filter(compile(Kql.parseOrThrow(kql), df.schema))
 }

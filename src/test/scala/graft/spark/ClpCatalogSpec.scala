@@ -262,6 +262,17 @@ class ClpCatalogSpec extends SparkSpecBase {
     assert(ClpCatalog.admissibleArchivesFor(spark, out, "* code=c1*",
       caseSensitive = true, None, None) == Seq("arch_old"))
     assert(ClpCatalog.search(spark, out, "* code=c1*").count() > 0)
+    // a JSON archive registers through the same gate: no `columns` column
+    // appears, and with no leaf summary the archive is never column-pruned
+    graft.pipeline.JsonPipeline.route(spark,
+      spark.range(4).select(col("id"), lit("{\"k\":1}").as("json")), "json",
+      s"$out/archives/arch_json",
+      options = graft.pipeline.JsonPipeline.Options(orderCol = Some("id")))
+    ClpCatalog.appendJsonEntry(spark, out, "arch_json")
+    assert(!graft.pipeline.LakeTable.read(spark, s"$out/catalog")
+      .columns.contains("columns"))
+    assert(ClpCatalog.admissibleArchivesForKql(spark, out, "nope: 1", None, None)
+      == Seq("arch_old", "arch_json"))
   }
 
   test("cross-archive union search equals one archive over the whole corpus") {
@@ -330,6 +341,11 @@ class ClpCatalogSpec extends SparkSpecBase {
     // the pruned fleet search answers exactly the matching archive's rows
     val res = ClpCatalog.searchKql(spark, out, "*.lang: en", Seq("k"))
     assert(res.count() == 10 && res.collect().forall(_.getLong(0) == 2L))
+    // the KQL prune decision is recorded and stamped into the job
+    // description exactly like the text search's
+    assert(ClpCatalog.lastPruneStats.contains(ClpCatalog.PruneStats(2, 1)))
+    assert(spark.sparkContext.getLocalProperty("spark.job.description")
+      .contains("1/2 archives admitted"))
     // conservatism fuzz: pruned fleet ≡ exhaustive per-archive union on
     // every query shape, absent columns and negations included
     for (q <- Seq("a: *", "k > 1", "NOT k: 2", "b.lang: e*", "nope: 1",
