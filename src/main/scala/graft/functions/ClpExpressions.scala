@@ -108,6 +108,20 @@ object ClpRuntime {
     new GenericArrayData(out)
   }
 
+  /** One id → value probe of a broadcast inverse dict (the scalar twin of
+    * [[dictValues]]). An absent id fails loudly and names itself: a routed
+    * row whose id its dictionary lacks is archive drift, never a row to
+    * drop from an answer. */
+  def dictValue(bc: org.apache.spark.broadcast.Broadcast[Map[Long, String]],
+                id: Long, dict: String): UTF8String =
+    bc.value.get(id) match {
+      case Some(v) => UTF8String.fromString(v)
+      case None => throw new IllegalStateException(missingIdMessage(dict, id.toString))
+    }
+
+  /** The one wording of a missing dictionary id, in both decode modes. */
+  def missingIdMessage(dict: String, id: String): String = s"id $id has no entry in $dict"
+
   /** Value → id probe of one encode-side broadcast map (the logtype map's
     * entries are (id, sink), the var map's the id alone). Like
     * [[resolveEncode]], a missing value fails loudly. */
@@ -412,6 +426,27 @@ case class DictValuesExpr(child: Expression,
   override protected def withNewChildInternal(c: Expression): DictValuesExpr =
     copy(child = c)
   override def prettyName: String = "dict_values"
+}
+
+/** `dict_value(id)` — the inverse of [[DictIdExpr]]: one id → value probe of
+  * a broadcast inverse dictionary bound at plan time, so the driver-map
+  * decode resolves `logtype_id` with no join; `dict` names the dictionary in
+  * the error a missing id raises. */
+case class DictValueExpr(child: Expression,
+    bc: org.apache.spark.broadcast.Broadcast[Map[Long, String]], dict: String)
+    extends UnaryExpression {
+  override def dataType: DataType = StringType
+  override def nullSafeEval(id: Any): Any =
+    ClpRuntime.dictValue(bc, id.asInstanceOf[Long], dict)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val bcRef = ctx.addReferenceObj("bcDictInv", bc,
+      classOf[org.apache.spark.broadcast.Broadcast[_]].getName)
+    val dictRef = ctx.addReferenceObj("dictName", dict)
+    defineCodeGen(ctx, ev, c => s"graft.functions.ClpRuntime.dictValue($bcRef, $c, $dictRef)")
+  }
+  override protected def withNewChildInternal(c: Expression): DictValueExpr =
+    copy(child = c)
+  override def prettyName: String = "dict_value"
 }
 
 /** `dict_id(value)` over one encode-side broadcast map bound at plan time —
@@ -837,6 +872,13 @@ object ClpFunctions {
       bc: org.apache.spark.broadcast.Broadcast[_ <: java.util.Map[String, _]]): Column =
     org.apache.spark.sql.GraftExpr.column(
       DictIdExpr(org.apache.spark.sql.GraftExpr.expression(value), bc))
+
+  /** One id → value through a broadcast inverse dictionary (see
+    * [[DictValueExpr]]); `dict` names it in a missing id's error. */
+  def dict_value(id: Column,
+      bc: org.apache.spark.broadcast.Broadcast[Map[Long, String]], dict: String): Column =
+    org.apache.spark.sql.GraftExpr.column(
+      DictValueExpr(org.apache.spark.sql.GraftExpr.expression(id), bc, dict))
 
   /** Broadcast-bound dictionary-id → value resolution; the broadcast rides
     * the Expression itself (no registry entry to leak one registration —

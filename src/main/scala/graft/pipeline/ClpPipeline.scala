@@ -110,44 +110,35 @@ object ClpPipeline {
         col("logtype_id"), col("sink_id"), col("vars"))
   }
 
-  /** Stage 5: fan-out write. Partitioning is (sink_id, hash(conv_id) % filesPerSink)
-    * so the hottest sink still spreads over `filesPerSink` tasks (skew-safe), and
-    * rows inside each file keep the stable (conv_id, turn_idx) order.
-    * The explicit partition count pins full parallelism (AQE would coalesce a
-    * small shuffle below the core count), and the leading sink_id sort makes
-    * the dynamic-partition writer's required ordering already satisfied — no
+  /** Stage 5: fan-out write, by the one [[fanOutWrite]] rule: rows go to
+    * (sink_id, hash(conv_id) % filesPerSink), so the hottest sink still
+    * spreads over `filesPerSink` files, and rows inside each file keep the
+    * stable (conv_id, turn_idx) order. */
+  def route(encoded: DataFrame, cfg: Config): Unit =
+    fanOutWrite(encoded, "sink_id", "conv_id", cfg.filesPerSink,
+      Seq("sink_id", "conv_id", "turn_idx"), cfg.parquetOptions, s"${cfg.outDir}/routed")
+
+  /** The one fan-out write of both pipelines (text sinks, JSON schemas):
+    * partition directories by `key`, each spread over `files` buckets of
+    * hash(`spread`), rows sorted by `order` (which leads with `key`). The
+    * explicit partition count pins full parallelism (AQE would coalesce a
+    * small shuffle below the core count, down to one task writing every
+    * directory serially), and the leading `key` sort makes the
+    * dynamic-partition writer's required ordering already satisfied — no
     * second sort before the parquet write. */
-  def route(encoded: DataFrame, cfg: Config): Unit = {
-    val spark = encoded.sparkSession
+  def fanOutWrite(rows: DataFrame, key: String, spread: String, files: Int,
+                  order: Seq[String], options: Map[String, String], path: String): Unit = {
+    val spark = rows.sparkSession
     val parts = math.max(spark.sparkContext.defaultParallelism * 2,
       spark.sessionState.conf.numShufflePartitions)
-    encoded
-      .repartition(parts, col("sink_id"), pmod(xxhash64(col("conv_id")), lit(cfg.filesPerSink)))
-      .sortWithinPartitions("sink_id", "conv_id", "turn_idx")
+    rows
+      .repartition(parts, col(key), pmod(xxhash64(col(spread)), lit(files.max(1))))
+      .sortWithinPartitions(order.map(col): _*)
       .write.mode("overwrite")
-      .options(cfg.parquetOptions)
-      .partitionBy("sink_id")
-      .parquet(s"${cfg.outDir}/routed")
+      .options(options)
+      .partitionBy(key)
+      .parquet(path)
   }
-
-  /** Stage 6: per-sink metrics (A1/A4) — count, conv count, ts min/max, bytes.
-    * Row/byte counts and ts bounds are exact (the correctness gate); the
-    * cardinality columns are HLL sketches — one pass, no count-distinct
-    * expansion shuffle. */
-  def sinkStats(routed: DataFrame): DataFrame =
-    routed.groupBy("sink_id").agg(
-      count(lit(1)).as("n_rows"),
-      approx_count_distinct(col("conv_id")).as("n_convs_approx"),
-      min(col("ts")).as("min_ts"),
-      max(col("ts")).as("max_ts"),
-      sum(col("n_bytes")).as("n_bytes"),
-      approx_count_distinct(col("logtype_id")).as("n_logtypes_approx"))
-
-  /** Per-(sink, file-bucket) lineage rows mirroring the physical route layout. */
-  def partitionLineage(encoded: DataFrame, cfg: Config): DataFrame =
-    encoded
-      .groupBy(col("sink_id"), pmod(xxhash64(col("conv_id")), lit(cfg.filesPerSink)).as("bucket"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("n_bytes")).as("n_bytes"))
 
   /** Full run with per-stage lineage manifests and exact resume.
     *

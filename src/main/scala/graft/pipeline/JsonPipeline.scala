@@ -57,7 +57,8 @@ object JsonPipeline {
     *        (archive_constants.hpp:31); None ⇒ a deterministic zipWithIndex
     *        pass assigns contiguous input-order indices
     * @param filesPerSchema fan-out within one schema's partition — bound on
-    *        file count for hot schemas (the ClpPipeline route twin)
+    *        file count for hot schemas (the one [[ClpPipeline.fanOutWrite]]
+    *        rule the text route uses too)
     */
   final case class Options(
       timestampKey: Option[String] = None,
@@ -280,11 +281,8 @@ object JsonPipeline {
     val prevShred = shredConfs.map(k => k -> spark.conf.getOption(k))
     if (options.shredRecords) shredConfs.foreach(spark.conf.set(_, "true"))
     try {
-      shaped0
-        .repartition(col("schema_id"),
-          pmod(xxhash64(col("log_event_idx")), lit(options.filesPerSchema.max(1))))
-        .sortWithinPartitions("schema_id", "log_event_idx")
-        .write.options(options.parquetOptions).partitionBy("schema_id").mode("overwrite").parquet(s"$outDir/records")
+      ClpPipeline.fanOutWrite(shaped0, "schema_id", "log_event_idx", options.filesPerSchema,
+        Seq("schema_id", "log_event_idx"), options.parquetOptions, s"$outDir/records")
     } finally if (options.shredRecords) prevShred.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)

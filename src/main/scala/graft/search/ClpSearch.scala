@@ -13,6 +13,14 @@ import graft.pipeline.{ClpCatalog, ClpPipeline, Dictionaries}
  * domain filter (`isin` + subsequence match, no decompression) → decode only
  * candidate rows → final wildcard verify iff the subquery is imprecise →
  * limit / top-k / count / count-by-time.
+ *
+ * Under the driver-map threshold the dictionaries stay resident for the
+ * engine's lifetime, as in the reference: both are collected once, their
+ * inverse maps are broadcast once, and the decode resolves ids through
+ * codegen'd lookups with no join, so a warm non-aggregating search is a
+ * single Spark job. Above the threshold every dictionary touch is a job and
+ * the decode joins. A routed `logtype_id` that the logtype dictionary lacks
+ * fails the query with an error naming the id, in both modes.
  */
 final class ClpSearch(spark: SparkSession, outDir: String,
                       driverDictThreshold: Long = ClpPipeline.DriverDictThreshold,
@@ -45,37 +53,45 @@ final class ClpSearch(spark: SparkSession, outDir: String,
     else withDecodedTextDistributed(rows)
 
   // broadcast ONCE per instance: a per-query broadcast would never be
-  // reclaimed while its plan is referenced, growing by |dict| per search
+  // reclaimed while its plan is referenced, growing by |dict| per search.
+  // Both are built from the dictionaries the driver-map mode has already
+  // collected, so opening them runs no job.
   private lazy val bcVarDictInv = spark.sparkContext.broadcast(varDictInv)
+  private lazy val bcLogtypeDictInv =
+    spark.sparkContext.broadcast(logtypeDict.iterator.map(e => e._1 -> e._2).toMap)
 
-  private def withDecodedTextBroadcast(rows: DataFrame): DataFrame = {
-    // fully codegen'd decode: ONE placeholder walk splits the merged var
-    // stream (clp_split_vars), the broadcast inverse dict rides the plan as
-    // a reference object (dict_values) — no interpreted UDF on the hot path
-    val bcInv = bcVarDictInv
+  private def withDecodedTextBroadcast(rows: DataFrame): DataFrame =
+    // fully codegen'd, join-free decode: logtype_id resolves through the
+    // broadcast logtype map (dict_value), ONE placeholder walk splits the
+    // merged var stream (clp_split_vars), the broadcast inverse var dict
+    // resolves its ids (dict_values) — a warm search is its scan job alone
     rows
-      .join(broadcast(logtypeDictDf), Seq("logtype_id"))
-      .withColumn("_sv", graft.functions.ClpFunctions.clp_split_vars(col("logtype"), col("vars")))
+      .withColumn("logtype", dict_value(col("logtype_id"), bcLogtypeDictInv, "logtype_dict"))
+      .withColumn("_sv", clp_split_vars(col("logtype"), col("vars")))
       .withColumn("text", clp_decode(col("logtype"), col("_sv.enc_vars"),
-        graft.functions.ClpFunctions.dict_values(col("_sv.dict_ids"), bcInv)))
+        dict_values(col("_sv.dict_ids"), bcVarDictInv)))
       .drop("logtype", "_sv")
-  }
 
-  /** Distributed decode (J3 as a real join): the dictionary ids of the var
-    * stream resolve to values through [[Dictionaries.joinPositional]] (the
-    * same hot-head broadcast + shuffle-tail join the pipeline encodes with),
-    * then decode. The only wide shuffle is the final join back on the stable
-    * (conv_id, turn_idx) key. */
+  /** Distributed decode (J3 as a real join): the logtype joins in (a left
+    * join, so a routed id its dictionary lacks raises instead of dropping
+    * the row), the dictionary ids of the var stream resolve to values
+    * through [[Dictionaries.joinPositional]] (the same hot-head broadcast +
+    * shuffle-tail join the pipeline encodes with), then decode. The only
+    * wide shuffle is the final join back on the stable (conv_id, turn_idx)
+    * key. */
   private def withDecodedTextDistributed(rows: DataFrame): DataFrame = {
     val key = Seq("conv_id", "turn_idx")
     // same codegen'd placeholder walk as the broadcast mode: one
     // clp_split_vars call yields the encoded subsequence AND the dictionary
     // ids; positions within the dict-id subsequence are enough to restore
     // order after the join, so nothing here needs an interpreted UDF
+    val missing = graft.functions.ClpRuntime.missingIdMessage("logtype_dict", "%s")
     val withLt = rows
-      .join(logtypeDictDf, Seq("logtype_id"))
-      .withColumn("_sv",
-        graft.functions.ClpFunctions.clp_split_vars(col("logtype"), col("vars")))
+      .join(logtypeDictDf, Seq("logtype_id"), "left")
+      .withColumn("logtype", when(col("logtype").isNull,
+          raise_error(format_string(missing, col("logtype_id"))))
+        .otherwise(col("logtype")))
+      .withColumn("_sv", clp_split_vars(col("logtype"), col("vars")))
     val dictVals = Dictionaries.joinPositional(withLt, key, col("_sv.dict_ids"), varDictDf,
       from = "var_id", to = "value", out = "dict_vals", hotHeadSize)
     withLt.join(dictVals, key, "left") // the single wide shuffle
@@ -239,14 +255,18 @@ final class ClpSearch(spark: SparkSession, outDir: String,
   def count(query: String, caseSensitive: Boolean = true): Long =
     search(query, caseSensitive).count()
 
-  /** Count-by-time (A2): bucket = floor(ts_ms / bucket_ms) * bucket_ms. */
+  /** Count-by-time (A2): bucket = floor(ts_ms / bucket_ms) * bucket_ms,
+    * ordered by bucket. The result holds one row per bucket, so it is sorted
+    * in one partition: a global `orderBy` would add a range-sampling job and
+    * a second shuffle for a handful of rows. */
   def countByTime(query: String, bucketMs: Long, caseSensitive: Boolean = true): DataFrame =
     search(query, caseSensitive)
       .withColumn("bucket",
         (floor(unix_millis(col("ts")) / lit(bucketMs)) * lit(bucketMs)))
       .groupBy("bucket")
       .agg(org.apache.spark.sql.functions.count(lit(1)).as("cnt"))
-      .orderBy("bucket")
+      .coalesce(1)
+      .sortWithinPartitions("bucket")
 }
 
 object ClpSearch {

@@ -160,6 +160,71 @@ class ClpSearchSpec extends SparkSpecBase {
       assert(got(e.search(q)) == oracle(q), s"mismatch for '$q' at threshold $t")
   }
 
+  /** Runs `body` under a fresh job group and returns its result with the
+    * number of Spark jobs it started. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val group = s"graft-jobs-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, "counted")
+      val r = body
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      (r, jobs.get())
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  test("a warm driver-map search runs its scan job alone: no broadcast join") {
+    val q = "*connection error*"
+    engine.search(q).collect() // warm-up: dictionaries load, broadcasts build
+    val (res, jobs) = jobsOf {
+      val df = engine.search(q)
+      df.collect()
+      df
+    }
+    assert(jobs == 1, s"a warm search must be one Spark job, saw $jobs")
+    val p = res.queryExecution.executedPlan.toString
+    assert(!p.contains("BroadcastExchange") && !p.contains("BroadcastHashJoin"),
+      s"per-query broadcast in a warm search plan:\n$p")
+    assert(p.contains("dict_value"))
+  }
+
+  test("a routed logtype_id missing from logtype_dict fails loudly in both modes") {
+    engine // force archive build
+    // a copy of the archive whose logtype dictionary lacks one routed id
+    val dir = Files.createTempDirectory("graft-search-drift").toString
+    Seq("routed", "var_dict", "sink_stats").foreach(d =>
+      org.apache.commons.io.FileUtils.copyDirectory(
+        new java.io.File(s"$outDir/$d"), new java.io.File(s"$dir/$d")))
+    val id = engine.routed.select("logtype_id").head.getLong(0)
+    spark.read.parquet(s"$outDir/logtype_dict").filter(col("logtype_id") =!= id)
+      .write.parquet(s"$dir/logtype_dict")
+    def messages(t: Throwable): Seq[String] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(e => String.valueOf(e.getMessage)).toSeq
+    for ((mode, e) <- Seq("driver-map" -> new ClpSearch(spark, dir),
+                          "distributed" -> new ClpSearch(spark, dir, driverDictThreshold = 0L))) {
+      def namesId(what: String, err: Throwable): Unit =
+        assert(messages(err).exists(_.contains(s"id $id has no entry in logtype_dict")),
+          s"$mode $what: the error must name the missing id, got:\n${messages(err).mkString("\n")}")
+      namesId("search", intercept[Exception](e.search("*").collect()))
+      namesId("top-k", intercept[Exception](e.topK("*", 5).collect()))
+      namesId("decode", intercept[Exception](e.withDecodedText(e.routed).collect()))
+      // a count needs no text: it may skip the decode, but never a row
+      scala.util.Try(e.count("*")) match {
+        case scala.util.Success(n) => assert(n == e.routed.count(), s"$mode count dropped rows")
+        case scala.util.Failure(err) => namesId("count", err)
+      }
+    }
+  }
+
   test("out-of-range ts query prunes every sink via the stats index (R3)") {
     engine // force archive build
     val maxTs = spark.read.parquet(s"$outDir/sink_stats")

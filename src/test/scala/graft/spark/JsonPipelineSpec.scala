@@ -193,6 +193,47 @@ class JsonPipelineSpec extends SparkSpecBase {
     assert(jobs.get() <= 10, s"route must be O(1) jobs, saw ${jobs.get()}")
   }
 
+  test("records write runs in parallel and keeps filesPerSchema part files per schema") {
+    val dir = Files.createTempDirectory("graft-jsonl-par").toString
+    val recs = Seq.tabulate(400)(i =>
+      if (i % 2 == 0) s"""{"id":$i,"msg":"even row $i"}""" else s"""{"id":$i,"ok":true}""").toDF("json")
+    // per stage: task count and records written, for this route's jobs only
+    val group = s"graft-jsonl-par-${System.nanoTime()}"
+    val stageTasks = new java.util.concurrent.ConcurrentHashMap[Int, Int]
+    val stageWritten = new java.util.concurrent.ConcurrentHashMap[Int, Long]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          js.stageInfos.foreach(si => stageTasks.put(si.stageId, si.numTasks))
+      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (te.taskMetrics != null)
+          stageWritten.merge(te.stageId, te.taskMetrics.outputMetrics.recordsWritten, _ + _)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val res =
+      try {
+        spark.sparkContext.setJobGroup(group, "json route")
+        val r = JsonPipeline.route(spark, recs, "json", dir)
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+        r
+      } finally {
+        spark.sparkContext.clearJobGroup()
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    assert(res.nSchemas == 2L)
+    // the records write is the route's stage that writes every record
+    val writeStage = stageTasks.keySet.toArray.map(_.asInstanceOf[Int])
+      .filter(id => stageWritten.getOrDefault(id, 0L) == 400L)
+    assert(writeStage.length == 1, s"expected one records-write stage, saw ${writeStage.toSeq}")
+    assert(stageTasks.get(writeStage.head) > 1, "the records write ran in one task")
+    val schemaDirs = new java.io.File(s"$dir/records").listFiles().filter(_.getName.startsWith("schema_id="))
+    assert(schemaDirs.length == 2)
+    schemaDirs.foreach { d =>
+      val parts = d.listFiles().count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      assert(parts == JsonPipeline.Options().filesPerSchema, s"${d.getName} holds $parts part files")
+    }
+  }
+
   test("wildcard projection: per-schema resolution with null-fill") {
     result // force
     val out = JsonPipeline.kqlSearch(spark, outDir, "k >= 1", Seq("id", "meta.*"))
