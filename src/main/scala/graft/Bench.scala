@@ -31,38 +31,13 @@ object Bench {
     "multimodal_frames", "dedup_paragraph", "pack_sequences",
     "corpus_filter_chain", "dedup_substring", "text_unigram_logprob")
 
-  private def session(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-bench-$cores")
-      .config("spark.sql.shuffle.partitions", (cores * 2).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
-      // local-scale IO tuning: the sf corpora compress to a few hundred MB, so
-      // the cluster-scale defaults (128 MB splits, 4 MB open cost, 64 MB AQE
-      // advisory) would collapse reads/shuffles to a handful of tasks and idle
-      // most cores. On a real cluster against TBs the defaults are correct.
-      .config("spark.sql.files.maxPartitionBytes", (16 * 1024 * 1024).toString)
-      .config("spark.sql.files.openCostInBytes", (512 * 1024).toString)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", (8 * 1024 * 1024).toString)
-      // task-side commit (v2): the default v1 renames every task file on the
-      // driver serially — seconds per stage at hundreds of files
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      // measured: zstd-compressing intermediates/shuffle to trade CPU for
-      // memory bandwidth LOWERED both legs ~20% here — snappy/lz4 defaults
-      // are the right point on this box; keep them
-      // shuffle/spill files on tmpfs when available — local-mode stand-in for
-      // cluster NVMe shuffle volumes; the measured work stays identical
-      .config("spark.local.dir",
-        if (new java.io.File("/dev/shm").canWrite) "/dev/shm/graft-spark" else
-          System.getProperty("java.io.tmpdir"))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    graft.functions.ClpFunctions.register(s)
-    s
-  }
+  /** One scaling leg's session: `local[cores]` whatever the launcher's
+    * master, under the measured settings table of [[GraftSession]].
+    * Measured there too: zstd-compressing shuffle and spill to trade CPU for
+    * memory bandwidth LOWERED both legs ~20% here, so the snappy/lz4
+    * defaults stay. */
+  private def session(cores: Int): SparkSession =
+    GraftSession(s"graft-bench-$cores", cores = Some(cores))
 
   /**
    * Pure-CPU burn at `threads` pinned workers for `millis`; returns aggregate

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * spark-submit entry for compression — the `clp c` surface: a transcript
  * table (parquet of conv_id, turn_idx, role, text, tool, ts), raw log
@@ -27,16 +25,7 @@ object Ingest {
     val flags = args.drop(2)
     def flagVal(name: String): Option[String] =
       flags.sliding(2).collectFirst { case Array(`name`, v) => v }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft-ingest")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.ClpFunctions.register(spark)
+    val spark = GraftSession("graft-ingest")
 
     // the measured archival storage profile (BENCH/BASELINE.md):
     // smallest archive, ~same read path; ingest pays the zstd-9 CPU

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * spark-submit entry for search — the `clg` / `clp-s s` surface over a
  * routed archive produced by [[Ingest]].
@@ -27,15 +25,7 @@ object Search {
     val flags = args.drop(2)
     def flagVal(name: String): Option[String] =
       flags.sliding(2).collectFirst { case Array(`name`, v) => v }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft-search")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.ClpFunctions.register(spark)
+    val spark = GraftSession("graft-search")
 
     val caseSensitive = !flags.contains("--ignore-case")
     val tsLo = flagVal("--ts-lo").map(ms => new java.sql.Timestamp(ms.toLong))
@@ -63,10 +53,7 @@ object Search {
 
     (flagVal("--count-by-time"), flags.contains("--count")) match {
       case (Some(bucket), _) =>
-        val byTime = results
-          .withColumn("bucket", org.apache.spark.sql.functions.expr(
-            s"floor(unix_millis(ts) / ${bucket.toLong}) * ${bucket.toLong}"))
-          .groupBy("bucket").count().orderBy("bucket")
+        val byTime = graft.search.ClpSearch.bucketCounts(results, bucket.toLong)
         flagVal("--out") match {
           case Some(dir) => byTime.write.mode("overwrite").parquet(dir)
           case None => byTime.show(100, truncate = false)

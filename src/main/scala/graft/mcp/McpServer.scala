@@ -399,15 +399,7 @@ final class McpServer(backend: McpServer.QueryBackend,
 object McpServerMain {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: McpServerMain <archiveDir> [--clp | --fleet]")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft-mcp-server")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.ClpFunctions.register(spark)
+    val spark = graft.GraftSession("graft-mcp-server")
     val backend =
       if (args.contains("--fleet")) new McpServer.FleetBackend(spark, args(0))
       else if (args.contains("--clp")) new McpServer.ClpArchiveBackend(spark, args(0))

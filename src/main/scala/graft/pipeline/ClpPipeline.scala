@@ -65,7 +65,7 @@ object ClpPipeline {
         * profile, and past the 4.27x gzip baseline) at ~flat ingest wall
         * time; zstd level 19 WITHOUT v2 is the measured max (5.00x, 2.4x
         * the write cost — at high levels plain pages beat delta pages).
-        * Full grid in BENCH/BASELINE.md (graft.tools.CompressionProbe). */
+        * Full grid in BENCH/BASELINE.md. */
       parquetOptions: Map[String, String] = Map.empty)
 
   final case class Result(

@@ -255,21 +255,26 @@ final class ClpSearch(spark: SparkSession, outDir: String,
   def count(query: String, caseSensitive: Boolean = true): Long =
     search(query, caseSensitive).count()
 
-  /** Count-by-time (A2): bucket = floor(ts_ms / bucket_ms) * bucket_ms,
-    * ordered by bucket. The result holds one row per bucket, so it is sorted
-    * in one partition: a global `orderBy` would add a range-sampling job and
-    * a second shuffle for a handful of rows. */
+  /** Count-by-time (A2) of a query's matches: see [[ClpSearch.bucketCounts]]. */
   def countByTime(query: String, bucketMs: Long, caseSensitive: Boolean = true): DataFrame =
-    search(query, caseSensitive)
-      .withColumn("bucket",
-        (floor(unix_millis(col("ts")) / lit(bucketMs)) * lit(bucketMs)))
-      .groupBy("bucket")
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("cnt"))
-      .coalesce(1)
-      .sortWithinPartitions("bucket")
+    ClpSearch.bucketCounts(search(query, caseSensitive), bucketMs)
 }
 
 object ClpSearch {
+  /** Per-bucket counts `(bucket, cnt)` of a results frame with a `ts`
+    * column: bucket = floor(ts_ms / bucket_ms) * bucket_ms, ordered by
+    * bucket. The result holds one row per bucket, so it is sorted in one
+    * partition: a global `orderBy` would add a range-sampling job and a
+    * second shuffle for a handful of rows. */
+  def bucketCounts(results: DataFrame, bucketMs: Long): DataFrame =
+    results
+      .withColumn("bucket",
+        (floor(unix_millis(col("ts")) / lit(bucketMs)) * lit(bucketMs)))
+      .groupBy("bucket")
+      .agg(count(lit(1)).as("cnt"))
+      .coalesce(1)
+      .sortWithinPartitions("bucket")
+
   /** The search-result schema with zero rows — the WontMatch answer, shared
     * by every layer that can prove emptiness before compiling a scan. */
   def emptyResults(spark: SparkSession): DataFrame =

@@ -33,14 +33,7 @@ object Extract {
     * writes reconstructed turns as per-conversation text lines. */
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: Extract <archiveDir> [outDir]")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft-extract")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.ClpFunctions.register(spark)
+    val spark = graft.GraftSession("graft-extract")
     val out = apply(spark, args(0))
     if (args.length > 1) {
       // globally sorted text output, one file per range partition of the

@@ -21,14 +21,7 @@ object JsonExtract {
     require(args.length >= 2, "usage: JsonExtract <archiveDir> <outDir> [chunkSize]")
     val Array(archiveDir, outDir) = args.take(2)
     val chunkSize = if (args.length > 2) args(2).toLong else 100000L
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft-json-extract")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.ClpFunctions.register(spark)
+    val spark = graft.GraftSession("graft-json-extract")
     run(spark, archiveDir, outDir, chunkSize).foreach { case (path, first, last) =>
       println(s"""{"path":"$path","begin_msg_ix":$first,"end_msg_ix":$last}""")
     }

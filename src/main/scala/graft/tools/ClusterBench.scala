@@ -14,7 +14,8 @@ import graft.pipeline.{ClpPipeline, TranscriptGen}
  * per-executor heaps — at `spark.cores.max`-controlled cluster sizes
  * (2-core executors: cores.max=2 → 1 executor, cores.max=8 → 4 executors).
  *
- * Modes (the master URL comes from spark-submit, never set here):
+ * Modes (the master URL comes from spark-submit; `graft.GraftSession` sizes
+ * the shuffle by `spark.cores.max`, the cluster size the submission is granted):
  *   gen <turnsDir> <nTurns>            — write the deterministic corpus once
  *   run <turnsDir> <workDir> [burnMs]  — warm-up run + calibration burn +
  *                                        ONE timed pipeline rep; prints one
@@ -25,36 +26,6 @@ import graft.pipeline.{ClpPipeline, TranscriptGen}
  * hypervisor noise windows, exactly like Bench's interleaved legs.
  */
 object ClusterBench {
-
-  private def session(): SparkSession = {
-    val s = SparkSession.builder()
-      .appName("graft-cluster-bench")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    // same local-scale IO/AQE tuning as graft.Bench (cluster-scale defaults
-    // would collapse the few-hundred-MB corpus into a handful of tasks).
-    // Cores come from the spark.cores.max conf, NOT defaultParallelism:
-    // right after getOrCreate no executor has registered yet, so
-    // defaultParallelism still reads its floor of 2 and would kneecap the
-    // shuffle tuning of the 8-core leg.
-    val cores = grantedCores(s)
-    s.conf.set("spark.sql.shuffle.partitions", (cores * 2).toString)
-    s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", (8 * 1024 * 1024).toString)
-    s.conf.set("spark.sql.files.maxPartitionBytes", (16 * 1024 * 1024).toString)
-    s.conf.set("spark.sql.files.openCostInBytes", (512 * 1024).toString)
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
-    s.sparkContext.hadoopConfiguration
-      .setInt("mapreduce.fileoutputcommitter.algorithm.version", 2)
-    graft.functions.ClpFunctions.register(s)
-    s
-  }
-
-  /** Cluster size this submission was granted (spark.cores.max on
-   *  standalone; local[N] thread count when run without a master). */
-  private def grantedCores(s: SparkSession): Int =
-    s.conf.getOption("spark.cores.max").map(_.toInt)
-      .getOrElse(s.sparkContext.defaultParallelism)
 
   /** Block until `want` executor processes have registered (driver row
    *  excluded), so the timed rep never starts on a partially-up cluster and
@@ -82,7 +53,7 @@ object ClusterBench {
 
   def main(args: Array[String]): Unit = args.toList match {
     case "gen" :: turnsDir :: nTurns :: Nil =>
-      val spark = session()
+      val spark = graft.GraftSession("graft-cluster-bench")
       TranscriptGen.turns(spark, nTurns.toLong, seed = 42L, partitions = 32)
         .write.mode("overwrite").parquet(turnsDir)
       println(s"""{"cluster_gen":{"turns":${spark.read.parquet(turnsDir).count()}}}""")
@@ -90,8 +61,8 @@ object ClusterBench {
 
     case "run" :: turnsDir :: workDir :: rest =>
       val burnMs = rest.headOption.map(_.toLong).getOrElse(8000L)
-      val spark = session()
-      val cores = grantedCores(spark)
+      val spark = graft.GraftSession("graft-cluster-bench")
+      val cores = graft.GraftSession.coresOf(spark.sparkContext.getConf)
       // tools/cluster_bench.sh fixes spark.executor.cores, so the expected
       // executor count is cores.max / executor.cores (2-core executors pair
       // 1-vs-4 executors; 1-core executors pair 2-vs-8 — the literal

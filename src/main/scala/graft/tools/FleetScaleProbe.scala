@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.{ClpCatalog, ClpPipeline, LakeTable, TranscriptGen}
@@ -50,15 +49,7 @@ object FleetScaleProbe {
   def main(args: Array[String]): Unit = {
     val sizes = args.headOption.getOrElse("256,1024")
       .split(",").map(_.trim.toInt).toSeq
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .appName("graft-fleet-scale-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.ClpFunctions.register(spark)
+    val spark = graft.GraftSession("graft-fleet-scale-probe")
 
     // one real archive through the full pipeline (~2k messages: big enough
     // that every sink/dict/stats file exists, small enough that the probe

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import graft.pipeline.{ClpPipeline, TranscriptGen}
 
 /** Dev-only: per-stage wall times of the pipeline at a given core count
@@ -12,26 +11,13 @@ import graft.pipeline.{ClpPipeline, TranscriptGen}
   * Usage: ProfilePipeline [cores] [turns] [driverDictThreshold] */
 object ProfilePipeline {
   def main(args: Array[String]): Unit = {
-    val cores = if (args.nonEmpty) args(0).toInt else 32
+    val cores = if (args.nonEmpty) args(0).toInt else graft.GraftSession.defaultCores
     val n = if (args.length > 1) args(1).toLong else 1000000L
     // optional third arg: driverDictThreshold (0 forces the fully
     // distributed no-driver-map dictionary mode end-to-end)
     val dictThreshold =
       if (args.length > 2) args(2).toLong else ClpPipeline.DriverDictThreshold
-    val spark = SparkSession.builder().master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", (cores * 2).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", (16 * 1024 * 1024).toString)
-      .config("spark.sql.files.openCostInBytes", (512 * 1024).toString)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", (8 * 1024 * 1024).toString)
-      // task-side commit (v2): the default v1 renames every task file on the
-      // driver serially — seconds per stage at hundreds of files
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.ClpFunctions.register(spark)
+    val spark = graft.GraftSession("graft-profile-pipeline", cores = Some(cores))
     @volatile var lastEnd = System.nanoTime()
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.JsonPipeline
@@ -29,15 +28,7 @@ object ShredProbe {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 2000000L
     val repeats = if (args.length > 1) args(1).toInt else 3
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir",
-        if (new java.io.File("/dev/shm").canWrite) "/dev/shm/graft-spark" else
-          System.getProperty("java.io.tmpdir"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.ClpFunctions.register(spark)
+    val spark = graft.GraftSession("graft-shred-probe")
 
     // one fat homogeneous schema: a ~300 B message body the query never
     // touches, a nested meta.lang the query filters on, and small scalars —

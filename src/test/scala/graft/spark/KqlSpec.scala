@@ -113,6 +113,27 @@ class KqlSpec extends SparkSpecBase {
     assert(n == exp && n > 0)
   }
 
+  test("timestamp-literal ranges follow the session time zone; GraftSession pins UTC") {
+    val at = Seq("2024-01-01T00:00:00Z", "2024-01-01T05:00:00Z", "2024-01-01T10:00:00Z")
+      .zipWithIndex.map { case (t, i) =>
+        (i.toLong, java.sql.Timestamp.from(java.time.Instant.parse(t))) }
+      .toDF("id", "ts")
+    def got(): Set[Long] = KqlCompiler.filter(at, "ts < \"2024-01-01 06:00:00\"")
+      .select("id").as[Long].collect().toSet
+    val tz = "spark.sql.session.timeZone"
+    val prev = spark.conf.get(tz)
+    try {
+      // a UTC-8 session reads the literal as 14:00 UTC: the answer moves
+      spark.conf.set(tz, "America/Los_Angeles")
+      assert(got() == Set(0L, 1L, 2L))
+      // a session resolved by GraftSession from that same conf reads 06:00 UTC
+      spark.conf.set(tz, graft.GraftSession.resolve(
+        new org.apache.spark.SparkConf(false).set(tz, "America/Los_Angeles")).get(tz))
+      assert(got() == Set(0L, 1L))
+    } finally spark.conf.set(tz, prev)
+    assert(got() == Set(0L, 1L), "the shared session is GraftSession's: UTC")
+  }
+
   test("leafSummary/couldMatchLeaves: fleet prune agrees with compile's fold") {
     import org.apache.spark.sql.types._
     // nasty field names: the summary encoding must round-trip dots, colons,

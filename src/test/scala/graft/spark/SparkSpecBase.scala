@@ -3,21 +3,10 @@ package graft.spark
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all Spark-backed suites. */
+/** Shared local SparkSession for all Spark-backed suites: the session users
+  * get, at 4 cores. */
 object SharedSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    graft.functions.ClpFunctions.register(s)
-    s
-  }
+  lazy val spark: SparkSession = graft.GraftSession("graft-test", cores = Some(4))
 }
 
 abstract class SparkSpecBase extends AnyFunSuite {
