@@ -433,19 +433,6 @@ object GraftQueries {
       })
     }
 
-  private val jsonShredArchiveCache = scala.collection.mutable.Map.empty[String, String]
-  private def jsonShredArchive(s: SparkSession, d: String): String =
-    jsonShredArchiveCache.synchronized {
-      jsonShredArchiveCache.getOrElseUpdate(d, {
-        val out = java.nio.file.Files.createTempDirectory("graft-json-shred").toString
-        graft.pipeline.JsonPipeline.route(s, jsonlDocs(s, d), "json", out,
-          options = graft.pipeline.JsonPipeline.Options(
-            timestampKey = Some("ts"), orderCol = Some("doc_id"),
-            shredRecords = true))
-        out
-      })
-    }
-
   private val jsonStructArchiveCache = scala.collection.mutable.Map.empty[String, String]
   private def jsonStructArchive(s: SparkSession, d: String): String =
     jsonStructArchiveCache.synchronized {
@@ -539,17 +526,6 @@ object GraftQueries {
       graft.pipeline.LakeTable.read(s, out, asOf = Some(1L))
         .select(col("doc_id").as("id"), md5(col("text")).as("fp"),
           lit(total).as("total_now"))
-        .orderBy("id")
-    }),
-    "jsonl_kql_shredded" -> ((s, d) => {
-      // the same KQL over a VARIANT-SHREDDED archive (clp_s per-column typed
-      // streams as Spark 4 parquet variant shredding): the query reads only
-      // the shredded `meta.lang`/`k` subcolumns — never `_raw` — with the
-      // predicate pushed into the scan (PlanQualitySpec asserts the
-      // ReadSchema cut); results must equal the row-wise layout's
-      val out = jsonShredArchive(s, d)
-      graft.pipeline.JsonPipeline
-        .kqlSearch(s, out, "*.lang : en AND k >= 50", Seq("id"))
         .orderBy("id")
     }),
     "jsonl_ts_range" -> ((s, d) => {
@@ -2293,10 +2269,6 @@ object GraftQueries {
          |  path, node_type
          |FROM sorted ORDER BY node_id""".stripMargin,
     "jsonl_kql_nested" ->
-      """SELECT doc_id AS id FROM documents
-        |WHERE doc_id % 4 = 1 AND lang = 'en' AND doc_id % 100 >= 50
-        |ORDER BY id""".stripMargin,
-    "jsonl_kql_shredded" ->
       """SELECT doc_id AS id FROM documents
         |WHERE doc_id % 4 = 1 AND lang = 'en' AND doc_id % 100 >= 50
         |ORDER BY id""".stripMargin,

@@ -3,13 +3,15 @@ package graft.functions
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.core.{ClpEncoding, Wildcard}
+import graft.core.{ClpEncoding, JsonShape, TimestampPatterns, Wildcard}
+import graft.pipeline.JsonPipeline
 
 /**
  * Static (Java-callable) runtime behind the Catalyst expressions — keeps the
@@ -48,8 +50,69 @@ object ClpRuntime {
       new GenericArrayData(e.encodedVars)))
   }
 
+  /** One JSON record's shape under the ingest options: (descriptor,
+    * timestamp-key epoch millis or null, array-shape entries). The
+    * max-document-size guard is the exact UTF-8 length, O(1) on a
+    * UTF8String; a null record fails like a malformed one. */
+  def jsonShape(json: UTF8String, o: JsonPipeline.Options): InternalRow = {
+    if (json == null) throw JsonShape.ParseError("record is null", 0)
+    if (json.numBytes.toLong > o.maxDocumentSize)
+      throw JsonShape.ParseError(
+        s"document exceeds max-document-size (${o.maxDocumentSize} B)", 0)
+    val ls = JsonShape.typedLeaves(json.toString, o.retainFloatFormat,
+      o.timestampKey, o.structurizeArrays)
+    val descriptor = ls.map(l => s"${l.path}:${l.nodeType}").distinct.sorted.mkString(";")
+    val ts: java.lang.Long = o.timestampKey.flatMap(k =>
+      ls.find(_.path == k).flatMap(l => parseTs(l.nodeType, l.value)))
+      .map(java.lang.Long.valueOf).orNull
+    // the archive stores keyed columns: a root that is not a non-empty
+    // object has no column name to live under and would be silently
+    // unqueryable (the reference wraps such roots under an unnamed root
+    // node, JsonParser.cpp:437-470 — documented divergence: we refuse).
+    // '$'-prefixed and log_event_idx top-level keys collide with the
+    // archive's own metadata columns in every search frame — reserved.
+    if (ls.headOption.exists(_.path.isEmpty))
+      throw JsonShape.ParseError("root must be a non-empty JSON object", 0)
+    ls.foreach { l =>
+      val head = l.path.takeWhile(_ != '.')
+      if (head.startsWith("$") || head == "log_event_idx")
+        throw JsonShape.ParseError(s"reserved top-level key '$head'", 0)
+    }
+    val shapes = ls.iterator
+      .filter(l => l.nodeType == "UnstructuredArray" || l.nodeType == "StructuredArray")
+      // structurize child leaves ([] path segments) are value-less type
+      // markers — a nested array among them would feed shapeOf("") and
+      // crash; the array node itself already carries the full raw text,
+      // so its shape covers every nested element
+      .filterNot(_.path.contains("[]"))
+      .map(l => s"${l.path}=${JsonShape.shapeOf(l.value)}")
+      .mkString("\u0001")
+    new GenericInternalRow(Array[Any](
+      UTF8String.fromString(descriptor), ts, UTF8String.fromString(shapes)))
+  }
+
+  /** Numeric timestamp-key values are epoch seconds unless already epoch
+    * millis (≥10^12); strings go through the reference's timestamp pattern
+    * corpus. Unparseable ⇒ None (the record stays, its schema range just
+    * doesn't tighten). */
+  private def parseTs(nodeType: String, value: String): Option[Long] = nodeType match {
+    case "DateString" => TimestampPatterns.searchFull(value).map(_.epochMs)
+    case "Integer" =>
+      value.toLongOption.map(v => if (math.abs(v) >= 1000000000000L) v else v * 1000L)
+    case "Float" | "FormattedFloat" | "DictionaryFloat" =>
+      // the same millis-vs-seconds heuristic as Integer — a float epoch-ms
+      // value multiplied again would land the range index off by 1000x
+      value.toDoubleOption.map(v =>
+        if (math.abs(v) >= 1.0e12) v.toLong else (v * 1000.0).toLong)
+    case _ => None
+  }
+
+  /** A stored record re-serialized from its typed leaves (ordered extract). */
+  def jsonReserialize(raw: UTF8String): UTF8String =
+    UTF8String.fromString(JsonShape.reserialize(JsonShape.typedLeaves(raw.toString)))
+
   def tsParse(text: UTF8String): InternalRow =
-    graft.core.TimestampPatterns.searchFull(text.toString) match {
+    TimestampPatterns.searchFull(text.toString) match {
       case Some(m) =>
         new GenericInternalRow(Array[Any](m.patternId, m.epochMs, m.begin, m.end))
       case None => null
@@ -588,6 +651,51 @@ case class ClpEncodeSchemaExpr(child: Expression, schema: graft.core.TokenizerSc
   override def prettyName: String = "clp_encode_schema"
 }
 
+/** `json_shape(json)` → struct<descriptor, ts, arr_shapes> with the JSON
+  * ingest options bound at plan time — the per-record shaping of
+  * [[graft.pipeline.JsonPipeline.route]] (see [[ClpRuntime.jsonShape]]).
+  * Never null: a null record raises the same loud parse error as a
+  * malformed one. */
+case class JsonShapeExpr(child: Expression, options: JsonPipeline.Options)
+    extends UnaryExpression {
+  override def dataType: DataType = JsonShapeExpr.outputType
+  override def nullable: Boolean = false
+  override def eval(input: InternalRow): Any =
+    ClpRuntime.jsonShape(child.eval(input).asInstanceOf[UTF8String], options)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("jsonOptions", options)
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      InternalRow ${ev.value} = graft.functions.ClpRuntime.jsonShape(
+        ${c.isNull} ? null : ${c.value}, $ref);""", isNull = FalseLiteral)
+  }
+  override protected def withNewChildInternal(c: Expression): JsonShapeExpr =
+    copy(child = c)
+  override def prettyName: String = "json_shape"
+}
+
+object JsonShapeExpr {
+  /** All fields nullable, though only `ts` is ever null: the records store
+    * keeps the optional parquet columns its archives have always had. */
+  val outputType: StructType = StructType(Seq(
+    StructField("descriptor", StringType),
+    StructField("ts", LongType),
+    StructField("arr_shapes", StringType)))
+}
+
+/** `json_reserialize(raw)` → the stored record re-serialized from its typed
+  * leaves — the marshalling step of the JSON archive's ordered extract. */
+case class JsonReserializeExpr(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = StringType
+  override def nullSafeEval(v: Any): Any =
+    ClpRuntime.jsonReserialize(v.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.ClpRuntime.jsonReserialize($c)")
+  override protected def withNewChildInternal(c: Expression): JsonReserializeExpr = copy(c)
+  override def prettyName: String = "json_reserialize"
+}
+
 /** `ts_pattern_parse(text)` → struct<pattern_id, epoch_ms, ts_begin, ts_end>
   * or null — format-preserving timestamp search (SURVEY §2.2 P2); begin/end
   * delimit the matched span (patterns may start after N spaces, mirroring the
@@ -902,6 +1010,15 @@ object ClpFunctions {
   def vec_normalize(a: Column): Column =
     org.apache.spark.sql.GraftExpr.column(
       VecNormalizeExpr(org.apache.spark.sql.GraftExpr.expression(a)))
+
+  /** Per-record JSON shaping; the ingest options are plan-time
+    * configuration captured by the Expression (see [[JsonShapeExpr]]). */
+  def json_shape(json: Column, options: JsonPipeline.Options): Column =
+    org.apache.spark.sql.GraftExpr.column(
+      JsonShapeExpr(org.apache.spark.sql.GraftExpr.expression(json), options))
+  def json_reserialize(raw: Column): Column =
+    org.apache.spark.sql.GraftExpr.column(
+      JsonReserializeExpr(org.apache.spark.sql.GraftExpr.expression(raw)))
 
   /** Grok/schema-mode encode; the schema is plan-time configuration captured
     * by the Expression directly — no per-schema registry entry. */

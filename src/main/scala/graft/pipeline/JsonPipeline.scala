@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{JsonShape, TimestampPatterns}
+import graft.core.JsonShape
+import graft.functions.ClpFunctions.{json_reserialize, json_shape}
 import graft.search.KqlCompiler.quoteName
 
 /**
@@ -81,78 +82,7 @@ object JsonPipeline {
       /** Parquet writer options for the archive outputs — same knob as
         * [[ClpPipeline.Config.parquetOptions]] (archival profile: zstd +
         * level 9 + v2 delta pages; see BENCH/BASELINE.md measurements). */
-      parquetOptions: Map[String, String] = Map.empty,
-      /** Store a shredded VARIANT twin (`_var`) of every record alongside
-        * `_raw` — the reference's per-column typed streams
-        * (clp_s/ColumnWriter.hpp:50-173) re-expressed as Spark 4 parquet
-        * variant shredding: each schema's homogeneous records shred into
-        * real typed subcolumns, so [[kqlSearch]] reads ONLY the queried
-        * leaves from disk (ReadSchema prunes to the shredded fields, filters
-        * push into the scan) instead of scanning + parsing the full `_raw`
-        * string of every candidate record. `_raw` stays authoritative for
-        * byte-exact [[extract]]. Divergence note: duplicate keys within one
-        * object resolve last-wins in the variant (same as the from_json
-        * query path). */
-      shredRecords: Boolean = false)
-
-  /** Numeric timestamp-key values are epoch seconds unless already epoch
-    * millis (≥10^12); strings go through the reference's timestamp pattern
-    * corpus. Unparseable ⇒ null (the record stays, its schema range just
-    * doesn't tighten). */
-  private def parseTs(nodeType: String, value: String): Option[Long] = nodeType match {
-    case "DateString" => TimestampPatterns.searchFull(value).map(_.epochMs)
-    case "Integer" =>
-      value.toLongOption.map(v => if (math.abs(v) >= 1000000000000L) v else v * 1000L)
-    case "Float" | "FormattedFloat" | "DictionaryFloat" =>
-      // the same millis-vs-seconds heuristic as Integer — a float epoch-ms
-      // value multiplied again would land the range index off by 1000x
-      value.toDoubleOption.map(v =>
-        if (math.abs(v) >= 1.0e12) v.toLong else (v * 1000.0).toLong)
-    case _ => None
-  }
-
-  /** (descriptor, epoch-millis-or-null, array-shape entries) per record —
-    * a flat tuple return so Catalyst's encoder codegen stays happy. */
-  private def shapeUdf(timestampKey: Option[String], structurizeArrays: Boolean,
-                       retainFloatFormat: Boolean = false,
-                       maxDocumentSize: Long = Long.MaxValue) =
-    udf { (json: String) =>
-      // cheap char-count fast path; exact UTF-8 length only near the cap
-      if (json.length.toLong * 3 > maxDocumentSize &&
-          json.getBytes(java.nio.charset.StandardCharsets.UTF_8).length.toLong >
-            maxDocumentSize)
-        throw JsonShape.ParseError(
-          s"document exceeds max-document-size ($maxDocumentSize B)", 0)
-      val ls = JsonShape.typedLeaves(json, retainFloatFormat,
-        timestampKey, structurizeArrays)
-      val descriptor = ls.map(l => s"${l.path}:${l.nodeType}").distinct.sorted.mkString(";")
-      val ts: java.lang.Long = timestampKey.flatMap(k =>
-        ls.find(_.path == k).flatMap(l => parseTs(l.nodeType, l.value)))
-        .map(java.lang.Long.valueOf).orNull
-      // the archive stores keyed columns: a root that is not a non-empty
-      // object has no column name to live under and would be silently
-      // unqueryable (the reference wraps such roots under an unnamed root
-      // node, JsonParser.cpp:437-470 — documented divergence: we refuse).
-      // '$'-prefixed and log_event_idx top-level keys collide with the
-      // archive's own metadata columns in every search frame — reserved.
-      if (ls.headOption.exists(_.path.isEmpty))
-        throw JsonShape.ParseError("root must be a non-empty JSON object", 0)
-      ls.foreach { l =>
-        val head = l.path.takeWhile(_ != '.')
-        if (head.startsWith("$") || head == "log_event_idx")
-          throw JsonShape.ParseError(s"reserved top-level key '$head'", 0)
-      }
-      val shapes = ls.iterator
-        .filter(l => l.nodeType == "UnstructuredArray" || l.nodeType == "StructuredArray")
-        // structurize child leaves ([] path segments) are value-less type
-        // markers — a nested array among them would feed shapeOf("") and
-        // crash; the array node itself already carries the full raw text,
-        // so its shape covers every nested element
-        .filterNot(_.path.contains("[]"))
-        .map(l => s"${l.path}=${JsonShape.shapeOf(l.value)}")
-        .mkString("\u0001")
-      (descriptor, ts, shapes)
-    }
+      parquetOptions: Map[String, String] = Map.empty)
 
   final case class Result(nRecords: Long, nSchemas: Long)
 
@@ -254,39 +184,22 @@ object JsonPipeline {
         spark.createDataFrame(rdd, base.schema.add("log_event_idx", LongType))
     }
 
-    // ONE shaping pass lands the records store partitioned by schema_id —
-    // shuffled once on (schema_id, bounded salt) so every schema gets
-    // contiguous, boundedly-many files, ordered by log_event_idx within
+    // ONE shaping pass (the codegen'd json_shape) lands the records store
+    // partitioned by schema_id — shuffled once on (schema_id, bounded salt)
+    // so every schema gets contiguous, boundedly-many files, ordered by
+    // log_event_idx within
     val shaped0 = indexed
-      .withColumn("_shape", shapeUdf(options.timestampKey, options.structurizeArrays,
-        options.retainFloatFormat, options.maxDocumentSize)(col(jsonCol)))
+      .withColumn("_shape", json_shape(col(jsonCol), options))
       .select(Seq(
-        md5(col("_shape._1")).as("schema_id"),
-        col("_shape._1").as("descriptor"),
-        col("_shape._2").as("$_ts"),
-        col("_shape._3").as("_arr_shapes"),
+        md5(col("_shape.descriptor")).as("schema_id"),
+        col("_shape.descriptor").as("descriptor"),
+        col("_shape.ts").as("$_ts"),
+        col("_shape.arr_shapes").as("_arr_shapes"),
         col("log_event_idx"),
         col(jsonCol).as("_raw")) ++
-        (if (options.shredRecords) Seq(parse_json(col(jsonCol)).as("_var")) else Nil) ++
         metadata.map { case (nm, c) => c.as(nm) }: _*)
-    // variant shredding is session-conf-driven (no per-write option): each
-    // per-schema file infers its own shredding schema — homogeneous by
-    // construction, so every leaf lands in a typed subcolumn. Confs are
-    // restored after the write (they also govern parse_json evaluation,
-    // which runs inside this job).
-    val shredConfs = Seq(
-      "spark.sql.variant.writeShredding.enabled",
-      "spark.sql.variant.inferShreddingSchema",
-      "spark.sql.variant.allowDuplicateKeys")
-    val prevShred = shredConfs.map(k => k -> spark.conf.getOption(k))
-    if (options.shredRecords) shredConfs.foreach(spark.conf.set(_, "true"))
-    try {
-      ClpPipeline.fanOutWrite(shaped0, "schema_id", "log_event_idx", options.filesPerSchema,
-        Seq("schema_id", "log_event_idx"), options.parquetOptions, s"$outDir/records")
-    } finally if (options.shredRecords) prevShred.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
+    ClpPipeline.fanOutWrite(shaped0, "schema_id", "log_event_idx", options.filesPerSchema,
+      Seq("schema_id", "log_event_idx"), options.parquetOptions, s"$outDir/records")
     // read back with the KNOWN schema: an empty corpus writes no part files,
     // and schema inference over zero files would crash; everything downstream
     // then flows through to an empty (but valid) archive
@@ -397,17 +310,6 @@ object JsonPipeline {
       .map(_.getString(0)).toSeq.sorted
   }
 
-  /** True iff every field name in the schema (at any depth) is expressible
-    * in both the variant path bracket syntax and unquoted-safe DDL — the
-    * conservative gate for the shredded read path; anything else falls back
-    * to from_json over `_raw` (same results, row-wise read). */
-  private def variantSafe(dt: DataType): Boolean = dt match {
-    case s: StructType => s.fields.forall(f =>
-      !f.name.exists(c => c == '"' || c == '\\' || c == '`') && variantSafe(f.dataType))
-    case a: ArrayType => variantSafe(a.elementType)
-    case _ => true
-  }
-
   private case class CatalogEntry(schemaId: String, descriptor: String,
                                   minTs: Option[Long], maxTs: Option[Long],
                                   sparkSchema: StructType)
@@ -509,25 +411,10 @@ object JsonPipeline {
         .exists(_ != true)
       if (cantMatch) None
       else {
-        val pruned = records.filter(col("schema_id") === e.schemaId) // partition-pruned
-        // Shredded archives read each top-level field straight from its
-        // typed variant subcolumn: the scan's ReadSchema prunes to the
-        // fields the query actually touches and predicates push into the
-        // parquet scan — `_raw` is never read (the clp_s per-column streams,
-        // ColumnWriter.hpp:50-173). try_variant_get mirrors PERMISSIVE
-        // from_json: null on absent path or cast mismatch. Field names the
-        // variant path / DDL syntax can't quote fall back to from_json.
-        val df =
-          if (records.columns.contains("_var") && variantSafe(e.sparkSchema))
-            pruned.select(metaCols.map(m => col(quoteName(m))) ++
-              Seq(col("log_event_idx")) ++
-              e.sparkSchema.fields.map(f =>
-                try_variant_get(col("_var"), "$[\"" + f.name + "\"]",
-                  f.dataType.sql).as(f.name)): _*)
-          else
-            pruned.withColumn("_rec", from_json(col("_raw"), e.sparkSchema))
-              .select(metaCols.map(m => col(quoteName(m))) ++
-                Seq(col("log_event_idx")) :+ col("_rec.*"): _*)
+        val df = records.filter(col("schema_id") === e.schemaId) // partition-pruned
+          .withColumn("_rec", from_json(col("_raw"), e.sparkSchema))
+          .select(metaCols.map(m => col(quoteName(m))) ++
+            Seq(col("log_event_idx")) :+ col("_rec.*"): _*)
         val tsPred = (tsLo.map(col("`$_ts`") >= _) ++ tsHi.map(col("`$_ts`") <= _))
           .reduceOption(_ && _).getOrElse(lit(true))
         Some((e, df.filter(kqlPred && tsPred).drop("log_event_idx")))
@@ -605,10 +492,8 @@ object JsonPipeline {
    * merge over the per-schema tables. Returns (log_event_idx, json).
    */
   def extract(spark: SparkSession, outDir: String, ordered: Boolean = true): DataFrame = {
-    val reser = udf((raw: String) =>
-      JsonShape.reserialize(JsonShape.typedLeaves(raw)))
     val recs = spark.read.parquet(s"$outDir/records")
-      .select(col("log_event_idx"), reser(col("_raw")).as("json"))
+      .select(col("log_event_idx"), json_reserialize(col("_raw")).as("json"))
     // callers that re-shuffle (e.g. JsonExtract's chunked writer) skip the
     // global range sort instead of paying for ordering they then destroy
     if (ordered) recs.orderBy("log_event_idx") else recs

@@ -178,6 +178,11 @@ object KqlCompiler {
     // raw-string semantics below. Double compare is exact for epoch millis
     // (< 2^53) and honors fractional operands the way the reference's test
     // corpus does (`timestamp > 1759417024299.9` ⇒ the 1759417024300 row).
+    // Divergence: the reference always ingests an encoded time for the
+    // timestamp key, so this compare always has a value. Here a date string
+    // no pattern parses keeps its record with a null `$_ts`: the compare is
+    // null, so the record never matches it, matches its negation (the
+    // null-safe NOT in `nnf`), and falls outside every tsLo/tsHi window.
     if (dateEpoch && !hasWildcard(value) && num.isDefined)
       return Some(rangeOp(col(quoteName("$_ts")).cast("double"), op, lit(num.get)))
     (op, dt) match {

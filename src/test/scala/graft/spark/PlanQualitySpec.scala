@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
 import org.apache.spark.sql.util.QueryExecutionListener
 
+import scala.jdk.CollectionConverters._
+
 import graft.pipeline.ClpPipeline
 
 /** Physical-plan assertions: filters/projections reach the parquet scan,
@@ -107,25 +109,55 @@ class PlanQualitySpec extends SparkSpecBase {
     b0.release()
   }
 
-  test("no plan a ClpPipeline.run executes contains an interpreted UDF") {
-    import graft.pipeline.TranscriptGen
+  /** Runs `body` under a query-execution listener and asserts that no plan
+    * it executed (analyzed or physical) contains an interpreted UDF; returns
+    * the executed plans so a caller can check they cover what it ran. */
+  private def assertNoUdfPlans(what: String)(body: => Unit): Seq[String] = {
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
     val listener = new QueryExecutionListener {
       def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
         plans.add(funcName -> s"${qe.analyzed}\n${qe.executedPlan}")
       def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
-    val out = java.nio.file.Files.createTempDirectory("graft-run-plans").toString
-    val turns = TranscriptGen.turns(spark, 2000, seed = 7L).toDF
     spark.listenerManager.register(listener)
     try {
-      ClpPipeline.run(spark, turns, ClpPipeline.Config(out, maxSinks = 8, saltParts = 4))
+      body
       org.apache.spark.ListenerBusDrain(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
-    assert(plans.size >= 5, s"expected every stage's plans, got ${plans.size}")
     plans.forEach { case (name, p) =>
-      assert(!p.contains("UDF("), s"interpreted UDF in a $name plan of ClpPipeline.run:\n$p")
+      assert(!p.contains("UDF("), s"interpreted UDF in a $name plan of $what:\n$p")
     }
+    plans.asScala.toSeq.map(_._2)
+  }
+
+  test("no plan a ClpPipeline.run executes contains an interpreted UDF") {
+    import graft.pipeline.TranscriptGen
+    val out = java.nio.file.Files.createTempDirectory("graft-run-plans").toString
+    val turns = TranscriptGen.turns(spark, 2000, seed = 7L).toDF
+    val plans = assertNoUdfPlans("ClpPipeline.run") {
+      ClpPipeline.run(spark, turns, ClpPipeline.Config(out, maxSinks = 8, saltParts = 4))
+    }
+    assert(plans.size >= 5, s"expected every stage's plans, got ${plans.size}")
+  }
+
+  test("no plan the JSON route, kqlSearch or extract executes contains an interpreted UDF") {
+    import spark.implicits._
+    import graft.pipeline.JsonPipeline
+    val out = java.nio.file.Files.createTempDirectory("graft-json-plans").toString
+    val jsonl = Seq(
+      """{"id":0,"ts":"2024-01-01 10:00:00","msg":"a b","f":1.50,"arr":[{"a":1}]}""",
+      """{"id":1,"ts":"2024-01-01 11:00:00","msg":"c d","f":2.25,"arr":[{"a":7}]}""",
+      """{"id":2,"ts":"2024-01-02 09:00:00","tags":["x","y"]}""").toDF("json")
+    val plans = assertNoUdfPlans("the JSON slice") {
+      JsonPipeline.route(spark, jsonl, "json", out, options = JsonPipeline.Options(
+        timestampKey = Some("ts"), structurizeArrays = true, retainFloatFormat = true))
+      assert(JsonPipeline.kqlSearch(spark, out, "arr.a > 5 OR tags : y", Seq("id"))
+        .as[Long].collect().toSet == Set(1L, 2L))
+      assert(JsonPipeline.extract(spark, out).collect().length == 3)
+    }
+    // the shaping and reserialize steps ran, as the codegen'd expressions
+    assert(plans.exists(_.contains("json_shape")), "no plan shaped the records")
+    assert(plans.exists(_.contains("json_reserialize")), "no plan reserialized a record")
   }
 
   test("curation gates: broadcasts where intended, no cartesian blowups") {
@@ -301,20 +333,5 @@ class PlanQualitySpec extends SparkSpecBase {
     // columns (conv_id/tool) — only role, logtype_id, vars survive
     val readSchemas = p.linesIterator.filter(_.contains("ReadSchema:")).mkString("\n")
     assert(!readSchemas.contains("conv_id"), readSchemas)
-  }
-
-  test("shredded archive: KQL reads only the queried variant subcolumns, never _raw") {
-    val df = graft.GraftQueries.queries("jsonl_kql_shredded")(spark, sf)
-    val p = executedPlan(df)
-    // the scan's ReadSchema must be the shredded variant struct cut down to
-    // the queried leaves — not the full record and not the raw JSON string
-    val readSchemas = p.linesIterator.filter(_.contains("ReadSchema:")).mkString("\n")
-    assert(readSchemas.contains("_var"), readSchemas)
-    assert(!readSchemas.contains("_raw"), readSchemas)
-    // at least one predicate pushes into the parquet scan as a filter over a
-    // shredded subcolumn (PushVariantIntoScan): lang = 'en' lands as
-    // EqualTo(_var.`<field>`.lang, en)
-    assert(p.linesIterator.exists(l =>
-      l.contains("PushedFilters") && l.contains("_var.")), p)
   }
 }

@@ -55,11 +55,10 @@ class ReferenceJsonFixtureSpec extends SparkSpecBase {
 
   test("no-floats corpus: compress → extract reproduces the corpus byte-exactly") {
     val ls = lines("test_no_floats_sorted.jsonl")
-    for (structurize <- Seq(false, true); shred <- Seq(false, true)) {
-      val dir = ingest(ls, JsonPipeline.Options(
-        structurizeArrays = structurize, shredRecords = shred))
+    for (structurize <- Seq(false, true)) {
+      val dir = ingest(ls, JsonPipeline.Options(structurizeArrays = structurize))
       assert(extractOrdered(dir) == ls,
-        s"structurize=$structurize shred=$shred must reconstruct byte-exact")
+        s"structurize=$structurize must reconstruct byte-exact")
     }
   }
 

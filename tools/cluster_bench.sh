@@ -18,6 +18,16 @@ TURNS=$WORK/turns
 MASTER=spark://127.0.0.1:7077
 export SPARK_HOME=$SPARK SPARK_LOG_DIR=$WORK/logs SPARK_PID_DIR=$WORK/pids
 
+# Heap sizes follow the host (GiB of MemTotal): the worker gets half of it,
+# each of its four 2-core executors a quarter of the worker, the driver a
+# sixth of the host (at least 2g). The former fixed sizes, 48g / 9g / 8g,
+# are the ceilings.
+MEM_G=$(awk '/^MemTotal:/ {print int($2 / 1048576)}' /proc/meminfo)
+clamp() { local v=$1 lo=$2 hi=$3; echo $(( v < lo ? lo : v > hi ? hi : v )); }
+WORKER_MEM=$(clamp $((MEM_G / 2)) 4 48)
+EXEC_MEM=$(clamp $((WORKER_MEM / 4)) 1 9)
+DRIVER_MEM=$(clamp $((MEM_G / 6)) 2 8)
+
 cleanup() {
   "$SPARK/sbin/stop-worker.sh" >/dev/null 2>&1 || true
   "$SPARK/sbin/stop-master.sh" >/dev/null 2>&1 || true
@@ -28,7 +38,7 @@ mkdir -p "$WORK/logs" "$WORK/pids"
 "$SPARK/sbin/start-master.sh" --host 127.0.0.1 --port 7077 --webui-port 8090
 # SPARK_LOCAL_DIRS (not spark.local.dir) is what standalone executors use
 # for shuffle/spill scratch — point it at tmpfs like graft.Bench does
-SPARK_WORKER_CORES=8 SPARK_WORKER_MEMORY=48g SPARK_LOCAL_DIRS=$WORK/spark-local \
+SPARK_WORKER_CORES=8 SPARK_WORKER_MEMORY=${WORKER_MEM}g SPARK_LOCAL_DIRS=$WORK/spark-local \
   "$SPARK/sbin/start-worker.sh" "$MASTER" --host 127.0.0.1 --webui-port 8091
 sleep 5
 
@@ -36,9 +46,9 @@ submit() { # submit <cores.max> <class-args...>
   local cmax=$1; shift
   "$SPARK/bin/spark-submit" --master "$MASTER" \
     --class graft.tools.ClusterBench \
-    --driver-memory 8g \
+    --driver-memory ${DRIVER_MEM}g \
     --conf spark.executor.cores=2 \
-    --conf spark.executor.memory=9g \
+    --conf spark.executor.memory=${EXEC_MEM}g \
     --conf "spark.cores.max=$cmax" \
     --conf spark.local.dir=$WORK/spark-local \
     --conf spark.sql.adaptive.enabled=true \
