@@ -33,12 +33,8 @@ object Search {
     val engine = new graft.search.ClpSearch(spark, archive)
 
     val results =
-      if (flags.contains("--kql")) {
-        // clp-s style: KQL predicate over the decoded rows of the archive
-        graft.search.KqlCompiler.filter(
-          engine.withDecodedText(engine.routed), rawQuery)
-          .select("conv_id", "turn_idx", "ts", "text")
-      } else {
+      if (flags.contains("--kql")) engine.kql(rawQuery) // clp-s style
+      else {
         val query =
           if (flags.contains("--regex"))
             graft.search.RegexToWildcard.translate(rawQuery,

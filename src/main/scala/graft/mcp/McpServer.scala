@@ -10,8 +10,8 @@ import org.json4s.jackson.JsonMethods
   * tools `get_instructions`, `search_by_kql`, `get_nth_page`, `hello_world`)
   * rebuilt over this engine's own search paths instead of a job-queue
   * connector: `search_by_kql` compiles the KQL straight onto the archive
-  * (clp-s records store via [[graft.pipeline.JsonPipeline.kqlSearch]], or a
-  * routed text archive via [[graft.search.KqlCompiler]] over decoded rows),
+  * (clp-s records store via [[graft.search.JsonSearch]], or a routed text
+  * archive via [[graft.search.ClpSearch.kql]] over decoded rows),
   * sorts newest-first, and caches the formatted page set in the session for
   * `get_nth_page` (session model in [[SessionManager]]).
   *
@@ -80,17 +80,17 @@ object McpServer {
     (events, rows.length > maxResults)
   }
 
-  /** KQL over a clp-s JSON archive: schema-pruned typed search
-    * ([[graft.pipeline.JsonPipeline.kqlSearch]] with wildcard projection),
-    * message = the matched record's kv-pairs serialized as one JSON object
-    * (the reference result cache's kv-pair log event), ts = `$_ts`. */
+  /** KQL over a clp-s JSON archive on one held [[graft.search.JsonSearch]]
+    * (its metadata read once), with wildcard projection; message = the
+    * matched record's kv-pairs serialized as one JSON object (the reference
+    * result cache's kv-pair log event), ts = `$_ts`. */
   final class JsonArchiveBackend(spark: SparkSession, archiveDir: String)
       extends QueryBackend {
+    private val engine = new graft.search.JsonSearch(spark, archiveDir)
     def searchByKql(kql: String, maxResults: Int): (Seq[LogEvent], Boolean) = {
       // `*` binds every record column; `$_ts` is requested explicitly (the
       // wildcard walks record paths, not the metadata namespace)
-      val hits = graft.pipeline.JsonPipeline.kqlSearch(
-        spark, archiveDir, kql, selectCols = Seq("$_ts", "*"))
+      val hits = engine.kql(kql, selectCols = Seq("$_ts", "*"))
       val dataCols = hits.columns.filterNot(_.startsWith("$")).sorted
       if (dataCols.isEmpty) return (Nil, false)
       // an archive ingested without a timestampKey has no $_ts — its events
@@ -104,16 +104,14 @@ object McpServer {
     }
   }
 
-  /** KQL over a routed CLP text archive: predicate over the decoded rows
-    * (same path as `graft.Search --kql`), message = decoded text. */
+  /** KQL over a routed CLP text archive on one held ClpSearch (its
+    * dictionaries loaded and broadcast once), as `graft.Search --kql`;
+    * message = decoded text. */
   final class ClpArchiveBackend(spark: SparkSession, archiveDir: String)
       extends QueryBackend {
-    def searchByKql(kql: String, maxResults: Int): (Seq[LogEvent], Boolean) = {
-      val engine = new graft.search.ClpSearch(spark, archiveDir)
-      val hits = graft.search.KqlCompiler.filter(
-        engine.withDecodedText(engine.routed), kql)
-      collectNewestFirst(hits, "ts", "text", maxResults)
-    }
+    private val engine = new graft.search.ClpSearch(spark, archiveDir)
+    def searchByKql(kql: String, maxResults: Int): (Seq[LogEvent], Boolean) =
+      collectNewestFirst(engine.kql(kql), "ts", "text", maxResults)
   }
 
   /** KQL over an entire archive FLEET (a [[graft.pipeline.ClpCatalog]]
@@ -185,9 +183,7 @@ object McpServer {
           // the fleet fixed cost — see ClpCatalog.parallelPlans)
           val hits = graft.pipeline.ClpCatalog.parallelPlans(
             spark, batch.map(_._1)) { id =>
-            val engine = new graft.search.ClpSearch(spark, s"$fleetDir/archives/$id")
-            graft.search.KqlCompiler.filter(
-              engine.withDecodedText(engine.routed), kql)
+            new graft.search.ClpSearch(spark, s"$fleetDir/archives/$id").kql(kql)
               .select(col("ts"), col("text"))
               // per-archive pre-limit: the global top-k can never need more
               // than k rows from any one archive. The ORDER must match the

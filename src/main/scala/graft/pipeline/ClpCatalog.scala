@@ -105,28 +105,7 @@ object ClpCatalog {
         timestamp_millis(max(col("max_ts"))).as("end_ts"),
         coalesce(sum(col("n_records")), lit(0L)).cast("long").as("n_messages")),
     "columns",
-    (spark, arch) => typedLit(jsonArchiveColumns(spark, arch)))
-
-  /** The MPT leaf summary of one JSON archive's SEARCH FRAMES: per schema,
-    * exactly the StructType [[JsonPipeline.kqlSearch]] compiles against
-    * (metadata `$`-columns + `log_event_idx` + the derived record schema),
-    * walked by [[graft.search.KqlCompiler.leafSummary]] — so the stored
-    * summary and the real per-archive resolution can never drift. */
-  private def jsonArchiveColumns(spark: SparkSession, archDir: String): Seq[String] = {
-    import org.apache.spark.sql.types._
-    val metaFields =
-      try spark.read.parquet(s"$archDir/records").schema.fields.toSeq
-        .filter(_.name.startsWith("$"))
-      catch { case _: org.apache.spark.sql.AnalysisException => Nil } // empty archive
-    val schemaJsons =
-      spark.read.parquet(s"$archDir/table_schemas").select("spark_schema")
-        .collect().map(_.getString(0)).toSeq
-    schemaJsons.flatMap { js =>
-      val st = DataType.fromJson(js).asInstanceOf[StructType]
-      graft.search.KqlCompiler.leafSummary(StructType(
-        metaFields ++ Seq(StructField("log_event_idx", LongType)) ++ st.fields))
-    }.distinct.sorted
-  }
+    (spark, arch) => typedLit(new graft.search.JsonSearch(spark, arch).leafSummary))
 
   /** Catalog columns after (archive_id, begin_ts, end_ts, n_messages), in
     * table order. Each arrived after the first catalogs were written, so a
@@ -193,7 +172,7 @@ object ClpCatalog {
   /** The one timestamp-window rule, at every level that keeps [min, max]
     * bounds: archives in a fleet (here), sinks in a text archive
     * ([[graft.search.ClpSearch]]) and schemas in a JSON archive
-    * ([[JsonPipeline.kqlSearch]]). True iff [min, max] overlaps [lo, hi]
+    * ([[graft.search.JsonSearch.kql]]). True iff [min, max] overlaps [lo, hi]
     * (inclusive; an absent side is unbounded). Missing bounds (no
     * timestamped row) cannot be placed in time and admit — except with
     * `pruneNullBounds` under a bounded window: clp-s then injects the
@@ -255,7 +234,7 @@ object ClpCatalog {
     * only a definitive structural miss (a required filter whose pattern
     * resolves to no leaf under KqlCompiler's own namespace + wildcard path
     * matching) prunes. `tsLo`/`tsHi` are epoch millis, matching
-    * [[JsonPipeline.kqlSearch]]. */
+    * [[graft.search.JsonSearch.kql]]. */
   def admissibleArchivesForKql(spark: SparkSession, outDir: String, kql: String,
                                tsLo: Option[Long], tsHi: Option[Long],
                                asOf: Option[Long] = None,
@@ -416,21 +395,18 @@ object ClpCatalog {
       graft.search.ClpSearch.emptyResults(spark), _.reduce(_ unionAll _))(
       textArchive(spark, outDir, query, caseSensitive, tsLo, tsHi))
 
-  /** Fleet KQL search over JSON archives: one [[JsonPipeline.kqlSearch]] per
+  /** Fleet KQL search over JSON archives: one [[graft.search.JsonSearch.kql]] per
     * admissible archive (each with its own schema-pruned per-schema plans),
     * widened into one result by the same rule that widens schemas within an
-    * archive ([[JsonPipeline.widen]]). Fan-out bounded exactly like
+    * archive ([[graft.search.JsonSearch.widen]]). Fan-out bounded exactly like
     * [[search]].
     *
     * An all-pruned query answers an empty frame typed from catalog metadata
-    * alone (no archive dir opens — the point of the prune): each archive's
-    * stored leaf summary rebuilds its search-frame schema, `selectCols`
-    * resolve through the SAME projection walk the real path uses, and the
-    * per-archive schemas widen under the same rule — so unioning it with a
-    * non-empty window's result of the same query stays type-compatible.
-    * Superset semantics: the universe is ALL cataloged archives (which
-    * archives a non-empty search would have admitted is unknowable here).
-    * Catalogs without leaf summaries fall back to all-string `selectCols`. */
+    * alone (no archive dir opens): each archive's stored leaf summary
+    * rebuilds its search-frame schema and `selectCols` resolve and widen as
+    * on the real path, so the result stays union-compatible with a
+    * non-empty window's. The universe is ALL cataloged archives; catalogs
+    * without leaf summaries fall back to all-string `selectCols`. */
   def searchKql(spark: SparkSession, outDir: String, kql: String,
                 selectCols: Seq[String],
                 tsLo: Option[Long] = None, tsHi: Option[Long] = None,
@@ -447,15 +423,16 @@ object ClpCatalog {
             graft.search.KqlCompiler.schemaFromLeafSummary(r.getSeq[String](0)),
             selectCols)
         }
-      JsonPipeline.widen(spark, selectCols, summaries)
+      graft.search.JsonSearch.widen(spark, selectCols, summaries)
     }
     fanOut(spark, s"ClpCatalog.searchKql($kql)",
       admissibleArchivesForKql(spark, outDir, kql, tsLo, tsHi, asOf, tags),
       maxFanout, "a time range, tags, or more specific columns")(
       allPruned,
-      parts => JsonPipeline.widen(spark, selectCols, parts.map(fields),
+      parts => graft.search.JsonSearch.widen(spark, selectCols, parts.map(fields),
         parts.map(p => p -> fields(p))))(
-      id => JsonPipeline.kqlSearch(spark, s"$outDir/archives/$id", kql, selectCols, tsLo, tsHi))
+      id => new graft.search.JsonSearch(spark, s"$outDir/archives/$id")
+        .kql(kql, selectCols, tsLo, tsHi))
   }
 
   /** The search step every archive kind shares: stamp the prune decision

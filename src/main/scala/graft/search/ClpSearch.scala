@@ -245,6 +245,13 @@ final class ClpSearch(spark: SparkSession, outDir: String,
     }
   }
 
+  /** KQL over the decoded rows (the `clp-s s` surface on a text archive):
+    * the predicate compiles against the routed columns plus `text`, and the
+    * answer is (conv_id, turn_idx, ts, text) like [[search]]'s. */
+  def kql(kql: String): DataFrame =
+    KqlCompiler.filter(withDecodedText(routed), kql)
+      .select("conv_id", "turn_idx", "ts", "text")
+
   /** Top-k latest results by timestamp — the results-cache semantics
     * (clo/OutputHandler.hpp:121-224) as TakeOrderedAndProject. */
   def topK(query: String, k: Int, caseSensitive: Boolean = true): DataFrame =

@@ -12,7 +12,8 @@ import graft.pipeline.{ClpPipeline, TranscriptGen}
  * the ratio with local[N] threads inside one JVM, this main evidences it with
  * separate executor PROCESSES — real netty shuffle, real serialization, real
  * per-executor heaps — at `spark.cores.max`-controlled cluster sizes
- * (2-core executors: cores.max=2 → 1 executor, cores.max=8 → 4 executors).
+ * (2-core executors: cores.max=2 → 1 executor, cores.max=8 → 4 executors;
+ * the script takes its hi leg from the host's cores, at most 8).
  *
  * Modes (the master URL comes from spark-submit; `graft.GraftSession` sizes
  * the shuffle by `spark.cores.max`, the cluster size the submission is granted):

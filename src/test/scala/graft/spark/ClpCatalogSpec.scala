@@ -377,6 +377,32 @@ class ClpCatalogSpec extends SparkSpecBase {
       s"${emptyStar.schema} vs ${fullStar.schema}")
   }
 
+  test("json fleet: the stored column summary is the leaf summary of every search frame") {
+    val out = java.nio.file.Files.createTempDirectory("graft-cat-frames").toString
+    val jsonl = spark.range(6).select(col("id"),
+      when(col("id") % 2 === 0,
+        concat(lit("{\"a\":"), col("id").cast("string"), lit("}")))
+        .otherwise(lit("{\"b\":{\"lang\":\"en\"},\"k\":2.5}")).as("json"))
+    // one archive with a `$` metadata column, one registered without
+    ClpCatalog.ingestJson(spark, jsonl, "json", lit("meta"), out,
+      metadata = Seq("$_filename" -> concat(lit("f"), col("id").cast("string"))))
+    graft.pipeline.JsonPipeline.route(spark, jsonl, "json", s"$out/archives/arch_plain")
+    ClpCatalog.appendJsonEntry(spark, out, "arch_plain")
+    val stored = graft.pipeline.LakeTable.read(spark, s"$out/catalog")
+      .select("archive_id", "columns").collect()
+      .map(r => r.getString(0) -> r.getSeq[String](1)).toMap
+    assert(stored.keySet == Set("arch_meta", "arch_plain"))
+    for ((id, columns) <- stored) {
+      val engine = new graft.search.JsonSearch(spark, s"$out/archives/$id")
+      assert(engine.catalog.size == 2)
+      val frames = engine.catalog.map(engine.frameSchema)
+      assert(columns == frames.flatMap(graft.search.KqlCompiler.leafSummary).distinct.sorted,
+        s"archive $id")
+      assert(columns.contains("log_event_idx:bigint") && columns.contains("b.lang:string"))
+      assert(columns.contains("$_filename:string") == (id == "arch_meta"), s"archive $id: $columns")
+    }
+  }
+
   test("dataset namespaces: registry, scoped search, unknown dataset refused") {
     val root = java.nio.file.Files.createTempDirectory("graft-cat-ds").toString
     assert(ClpCatalog.datasets(spark, root).isEmpty)

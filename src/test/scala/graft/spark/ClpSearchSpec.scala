@@ -160,28 +160,6 @@ class ClpSearchSpec extends SparkSpecBase {
       assert(got(e.search(q)) == oracle(q), s"mismatch for '$q' at threshold $t")
   }
 
-  /** Runs `body` under a fresh job group and returns its result with the
-    * number of Spark jobs it started. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val group = s"graft-jobs-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobGroup(group, "counted")
-      val r = body
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
-      (r, jobs.get())
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
-    }
-  }
-
   test("a warm driver-map search runs its scan job alone: no broadcast join") {
     val q = "*connection error*"
     engine.search(q).collect() // warm-up: dictionaries load, broadcasts build

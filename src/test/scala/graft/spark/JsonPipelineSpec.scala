@@ -120,6 +120,32 @@ class JsonPipelineSpec extends SparkSpecBase {
     assert(noTsArchive.count() == 0)
   }
 
+  test("a held JsonSearch: a warm query is its scan job alone, a ts-pruned query runs none") {
+    val dir = Files.createTempDirectory("graft-jsonl-held").toString
+    val base = 1704067200000L
+    // 300 records in 3 schemas, a timestamp key and one `$` metadata column,
+    // so the engine holds a catalog, record schemas, metadata fields and a
+    // range index
+    val recs = Seq.tabulate(300) { i =>
+      val extra = i % 3 match { case 0 => "" case 1 => s""","k":$i""" case _ => s""","m":{"x":$i}""" }
+      (i, s"""{"id":$i,"ts":${base + i * 1000L},"msg":"m $i"$extra}""")
+    }.toDF("n", "json")
+    JsonPipeline.route(spark, recs, "json", dir,
+      metadata = Seq("$_filename" -> concat(lit("f"), (col("n") % 2).cast("string"), lit(".jsonl"))),
+      options = JsonPipeline.Options(timestampKey = Some("ts")))
+    val engine = new graft.search.JsonSearch(spark, dir)
+    val q = """$_filename: "f1.jsonl""""
+    val (lo, hi) = (Some(base + 100000L), Some(base + 199000L))
+    engine.kql(q, Seq("id"), lo, hi).collect() // warm-up: the metadata loads once
+    val (hits, scanJobs) = jobsOf(engine.kql(q, Seq("id"), lo, hi).collect())
+    assert(hits.map(_.getLong(0)).toSet == (101L to 199L by 2L).toSet)
+    assert(scanJobs == 1, s"a warm KQL query must be one Spark job, saw $scanJobs")
+    val (none, prunedJobs) = jobsOf(
+      engine.kql(q, Seq("id"), Some(base + 1000000L), None).collect())
+    assert(none.isEmpty)
+    assert(prunedJobs == 0, s"a ts-pruned KQL query must run no job, saw $prunedJobs")
+  }
+
   test("ordered extraction reconstructs the original JSONL byte-exactly") {
     tsRoute // force
     val got = JsonPipeline.extract(spark, tsDir).collect()

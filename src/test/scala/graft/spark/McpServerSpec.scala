@@ -230,6 +230,10 @@ class McpServerSpec extends SparkSpecBase {
     assert(!overflow)
     assert(events.map(_.message) == Seq("request took 7 ms"))
     assert(events.head.tsMs.contains(1704067200000L + 7000L))
+    // the backend holds its engine: a second query answers from the same one
+    val (more, moreOverflow) = backend.searchByKql("""text: "*took 1? ms*"""", 100)
+    assert(!moreOverflow)
+    assert(more.map(_.message) == (19 to 10 by -1).map(i => s"request took $i ms"))
   }
 
   test("FleetBackend searches every cataloged archive, newest-first, paged") {

@@ -11,4 +11,26 @@ object SharedSpark {
 
 abstract class SparkSpecBase extends AnyFunSuite {
   lazy val spark: SparkSession = SharedSpark.spark
+
+  /** Runs `body` under a fresh job group and returns its result with the
+    * number of Spark jobs it started. */
+  protected def jobsOf[T](body: => T): (T, Int) = {
+    val group = s"graft-jobs-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, "counted")
+      val r = body
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      (r, jobs.get())
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
 }

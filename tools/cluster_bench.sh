@@ -2,9 +2,10 @@
 # Multi-executor scaling evidence for the BASELINE.json north rule:
 # stand up a REAL Spark standalone cluster on this box (master + worker
 # daemons, separate executor JVMs, netty shuffle), then spark-submit the
-# pipeline at two cluster sizes — 1 executor and 4 executors (2 cores
-# each) — interleaved hi/lo so both sizes sample the same hypervisor noise
-# windows. Prints per-rep JSON lines and a final efficiency summary.
+# pipeline at two cluster sizes — 1 executor (2 cores) and HI/2 executors
+# (2 cores each), HI = min(8, nproc) rounded down to even — interleaved
+# hi/lo so both sizes sample the same hypervisor noise windows. Prints
+# per-rep JSON lines and a final efficiency summary.
 #
 # Usage: tools/cluster_bench.sh [nTurns]   (default 64000000, ~25 min)
 set -euo pipefail
@@ -28,6 +29,13 @@ WORKER_MEM=$(clamp $((MEM_G / 2)) 4 48)
 EXEC_MEM=$(clamp $((WORKER_MEM / 4)) 1 9)
 DRIVER_MEM=$(clamp $((MEM_G / 6)) 2 8)
 
+# Core counts follow the host too: the worker offers every core, the hi leg
+# takes min(8, nproc) rounded down to even (whole 2-core executors), the lo
+# leg one executor. On a host with fewer than 4 cores both legs are 2 cores.
+NPROC=$(nproc)
+LO_CORES=2
+HI_CORES=$(clamp $(( (NPROC < 8 ? NPROC : 8) / 2 * 2 )) $LO_CORES 8)
+
 cleanup() {
   "$SPARK/sbin/stop-worker.sh" >/dev/null 2>&1 || true
   "$SPARK/sbin/stop-master.sh" >/dev/null 2>&1 || true
@@ -38,7 +46,7 @@ mkdir -p "$WORK/logs" "$WORK/pids"
 "$SPARK/sbin/start-master.sh" --host 127.0.0.1 --port 7077 --webui-port 8090
 # SPARK_LOCAL_DIRS (not spark.local.dir) is what standalone executors use
 # for shuffle/spill scratch — point it at tmpfs like graft.Bench does
-SPARK_WORKER_CORES=8 SPARK_WORKER_MEMORY=${WORKER_MEM}g SPARK_LOCAL_DIRS=$WORK/spark-local \
+SPARK_WORKER_CORES=$NPROC SPARK_WORKER_MEMORY=${WORKER_MEM}g SPARK_LOCAL_DIRS=$WORK/spark-local \
   "$SPARK/sbin/start-worker.sh" "$MASTER" --host 127.0.0.1 --webui-port 8091
 sleep 5
 
@@ -58,26 +66,28 @@ submit() { # submit <cores.max> <class-args...>
 
 RESULTS=$WORK/results.jsonl
 : >"$RESULTS"
-[ -d "$TURNS" ] || submit 8 gen "$TURNS" "$NTURNS" | tee -a "$RESULTS"
+[ -d "$TURNS" ] || submit $HI_CORES gen "$TURNS" "$NTURNS" | tee -a "$RESULTS"
 
-# interleaved legs: hi(4 executors), lo(1 executor), hi, lo, hi
-for leg in 8 2 8 2 8; do
+# interleaved legs: hi, lo(1 executor), hi, lo, hi
+for leg in $HI_CORES $LO_CORES $HI_CORES $LO_CORES $HI_CORES; do
   rm -rf "$WORK/run"
   submit "$leg" run "$TURNS" "$WORK/run" | tee -a "$RESULTS"
 done
 
-python3 - "$RESULTS" <<'EOF'
+python3 - "$RESULTS" "$HI_CORES" "$LO_CORES" <<'EOF'
 import json, sys
+hi_cores, lo_cores = int(sys.argv[2]), int(sys.argv[3])
 runs = [json.loads(l)["cluster_run"] for l in open(sys.argv[1]) if '"cluster_run"' in l]
-hi = [r for r in runs if r["total_cores"] == 8]
-lo = [r for r in runs if r["total_cores"] == 2]
+hi = [r for r in runs if r["total_cores"] == hi_cores]
+lo = [r for r in runs if r["total_cores"] == lo_cores]
 bh, bl = max(r["thr"] for r in hi), max(r["thr"] for r in lo)
 print(json.dumps({"cluster_scaling": {
+    "cores_lo": lo_cores, "cores_hi": hi_cores,
     "executors_lo": max(r["executors"] for r in lo),
     "executors_hi": max(r["executors"] for r in hi),
     "thr_lo": bl, "thr_hi": bh,
     "reps_thr_lo": [r["thr"] for r in lo], "reps_thr_hi": [r["thr"] for r in hi],
     "reps_burn_lo": [r["burn_miters_per_sec"] for r in lo],
     "reps_burn_hi": [r["burn_miters_per_sec"] for r in hi],
-    "efficiency": round(bh / (4 * bl), 3)}}))
+    "efficiency": round(bh / ((hi_cores / lo_cores) * bl), 3)}}))
 EOF
