@@ -7,7 +7,7 @@ import graft.functions.ClpFunctions.{minhash_sigs, simhash64, vec_dot}
 
 /**
  * Production-width near-duplicate detection — the parameterized twins of the
- * demo-width oracle-gate entries in [[GraftQueries]] (which stay at 4
+ * demo-width oracle gates in [[graft.gates.DedupGates]] (which stay at 4
  * MinHash fns / 8-bit SimHash / 4 LSH planes because their DuckDB oracles
  * mirror every hash constant). These APIs carry the widths a real 100 TB
  * dedup run uses:
@@ -25,6 +25,16 @@ import graft.functions.ClpFunctions.{minhash_sigs, simhash64, vec_dot}
  * exact kernel (Jaccard / cosine) only per candidate pair.
  */
 object Dedup {
+
+  /** 3-gram word shingles (1-based element_at matches DuckDB list indexing).
+    * Guarded for <3 tokens: sequence(1, 0) would auto-step -1 in Spark while
+    * DuckDB's generate_series yields an empty list — match the empty-series
+    * semantics (and avoid element_at index errors). */
+  def shingles(words: Column): Column =
+    when(size(words) >= 3,
+      transform(sequence(lit(1), size(words) - 2), i =>
+        concat_ws(" ", element_at(words, i), element_at(words, i + 1), element_at(words, i + 2))))
+      .otherwise(array().cast("array<string>"))
 
   /**
    * Connected components over a near-dup pair graph — the clustering step a
@@ -114,7 +124,7 @@ object Dedup {
     val (fa, fb) = minhashFamily(nFns)
     val base = docs.select(
       col(idCol).as("doc_id"),
-      array_distinct(GraftQueries.shingles(split(col(textCol), " "))).as("sh"))
+      array_distinct(shingles(split(col(textCol), " "))).as("sh"))
       // sub-3-token docs have NO shingles: their signatures would all be the
       // identical all-MaxValue vector, co-bucketing every such doc in every
       // band (O(m^2) candidates) only for the 0/0 Jaccard verify to null

@@ -2,8 +2,10 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  * Query bodies live in [[GraftQueries]] (operator coverage per SURVEY §2). */
+/** Driver contract (SURVEY.md §7). Both maps derive from the one gate list
+  * [[GraftQueries.gates]]: each [[graft.gates.Gate]] holds a query's Spark
+  * body and its oracle, grouped by operator family under `graft/gates/`
+  * (operator coverage per SURVEY §2). */
 object SparkEntry {
 
   /** Flagship on sf0.001: the CLP round-trip gate over the documents table —

@@ -38,7 +38,7 @@ object JsonExtract {
     // Persisted because BOTH the chunk write and the manifest aggregation
     // consume it — without this the reserialize pass (the job's dominant
     // cost) runs twice.
-    val recs = graft.pipeline.JsonPipeline.extract(spark, archiveDir, ordered = false)
+    val recs = new JsonSearch(spark, archiveDir).extract(ordered = false)
       .withColumn("chunk", (col("log_event_idx") / chunkSize).cast("long"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 

@@ -207,7 +207,7 @@ final class StreamingDedup(spark: SparkSession, storeDir: String,
   /** (doc_id, sigs) for every shingleable incoming doc. */
   private def signatures(docs: DataFrame): DataFrame =
     docs.select(col("doc_id").cast("long").as("doc_id"),
-        array_distinct(graft.GraftQueries.shingles(split(col("text"), " "))).as("sh"))
+        array_distinct(graft.Dedup.shingles(split(col("text"), " "))).as("sh"))
       .filter(size(col("sh")) > 0)
       .withColumn("sigs", sigCol(col("sh")))
       .drop("sh")

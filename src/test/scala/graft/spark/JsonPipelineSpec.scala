@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.JsonPipeline
+import graft.search.JsonSearch
 
 /** clp_s slice: schema discovery + per-schema columnar routing + KQL with
   * wildcard paths resolved against the discovered schemas. */
@@ -44,9 +45,9 @@ class JsonPipelineSpec extends SparkSpecBase {
 
   test("per-schema tables are typed columnar parquet with same-shape rows together") {
     result // force
-    val nested = JsonPipeline.schemasWithPath(spark, outDir, "meta.lang")
+    val nested = new JsonSearch(spark, outDir).schemasWithPath("meta.lang")
     assert(nested.size == 1)
-    val tbl = JsonPipeline.table(spark, outDir, nested.head)
+    val tbl = new JsonSearch(spark, outDir).table(nested.head)
     assert(tbl.count() == 2)
     assert(tbl.schema("meta").dataType.isInstanceOf[org.apache.spark.sql.types.StructType])
     assert(tbl.select("meta.lang").as[String].collect().toSet == Set("en", "fr"))
@@ -148,7 +149,7 @@ class JsonPipelineSpec extends SparkSpecBase {
 
   test("ordered extraction reconstructs the original JSONL byte-exactly") {
     tsRoute // force
-    val got = JsonPipeline.extract(spark, tsDir).collect()
+    val got = new JsonSearch(spark, tsDir).extract().collect()
     assert(got.map(_.getLong(0)).toSeq == Seq(0L, 1L, 2L, 3L, 4L))
     val originals = Seq(
       """{"id":0,"ts":"2024-01-01 10:00:00","msg":"a b"}""",
@@ -166,7 +167,7 @@ class JsonPipelineSpec extends SparkSpecBase {
     val idx = spark.read.parquet(s"$dir/records")
       .select("log_event_idx").as[Long].collect().sorted.toSeq
     assert(idx == (0L until 50L))
-    val back = JsonPipeline.extract(spark, dir).collect().map(_.getString(1)).toSeq
+    val back = new JsonSearch(spark, dir).extract().collect().map(_.getString(1)).toSeq
     assert(back == Seq.tabulate(50)(i => s"""{"n":$i}"""))
   }
 
@@ -262,7 +263,7 @@ class JsonPipelineSpec extends SparkSpecBase {
       .as[Long].collect().toSet
     assert(hits == Set(7L))
     // extraction still byte-exact in structurize mode
-    val back = JsonPipeline.extract(spark, dir).collect().map(_.getString(1)).toSeq
+    val back = new JsonSearch(spark, dir).extract().collect().map(_.getString(1)).toSeq
     assert(back == Seq(
       """{"idx":7,"arr":[{"a":999},{"b":1001}]}""",
       """{"idx":8,"arr":[{"a":1},{"b":2}]}""",
@@ -280,9 +281,9 @@ class JsonPipelineSpec extends SparkSpecBase {
       options = JsonPipeline.Options(structurizeArrays = true))
     assert(res.nRecords == 2)
     // the derived table schema types the nested array without inference
-    val schemaIds = JsonPipeline.schemasWithPath(spark, dir, "name")
+    val schemaIds = new JsonSearch(spark, dir).schemasWithPath("name")
     assert(schemaIds.size == 1)
-    val tbl = JsonPipeline.table(spark, dir, schemaIds.head)
+    val tbl = new JsonSearch(spark, dir).table(schemaIds.head)
     assert(tbl.count() == 2)
     assert(tbl.schema("a").dataType ==
       org.apache.spark.sql.types.ArrayType(

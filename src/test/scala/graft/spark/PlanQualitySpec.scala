@@ -7,6 +7,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
 import scala.jdk.CollectionConverters._
 
 import graft.pipeline.ClpPipeline
+import graft.search.JsonSearch
 
 /** Physical-plan assertions: filters/projections reach the parquet scan,
   * dimension joins broadcast, aggregations split partial/final, windowed
@@ -153,7 +154,7 @@ class PlanQualitySpec extends SparkSpecBase {
         timestampKey = Some("ts"), structurizeArrays = true, retainFloatFormat = true))
       assert(JsonPipeline.kqlSearch(spark, out, "arr.a > 5 OR tags : y", Seq("id"))
         .as[Long].collect().toSet == Set(1L, 2L))
-      assert(JsonPipeline.extract(spark, out).collect().length == 3)
+      assert(new JsonSearch(spark, out).extract().collect().length == 3)
     }
     // the shaping and reserialize steps ran, as the codegen'd expressions
     assert(plans.exists(_.contains("json_shape")), "no plan shaped the records")

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{JsonShape, KvIr}
 import graft.pipeline.JsonPipeline
+import graft.search.JsonSearch
 
 /** The structured (clp-s) pipeline over the reference's OWN JSON fixtures,
   * read in place, mirroring its end-to-end suites:
@@ -50,7 +51,7 @@ class ReferenceJsonFixtureSpec extends SparkSpecBase {
   }
 
   private def extractOrdered(dir: String): Seq[String] =
-    JsonPipeline.extract(spark, dir).orderBy("log_event_idx")
+    new JsonSearch(spark, dir).extract().orderBy("log_event_idx")
       .select("json").collect().map(_.getString(0)).toSeq
 
   test("no-floats corpus: compress → extract reproduces the corpus byte-exactly") {
@@ -147,7 +148,7 @@ class ReferenceJsonFixtureSpec extends SparkSpecBase {
   test("simple-order corpus: event index preserves input log order") {
     val ls = lines("test_simple_order.jsonl")
     val dir = ingest(ls, JsonPipeline.Options())
-    val got = JsonPipeline.extract(spark, dir).orderBy("log_event_idx")
+    val got = new JsonSearch(spark, dir).extract().orderBy("log_event_idx")
       .select("log_event_idx", "json").collect()
     assert(got.map(_.getLong(0)).toSeq == ls.indices.map(_.toLong))
     assert(got.map(_.getString(1).replace(" ", "")).toSeq ==

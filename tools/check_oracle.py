@@ -1,13 +1,18 @@
 #!/usr/bin/env python3
 """Local mimic of the driver's DuckDB correctness gate: runs each oracle SQL
 against the sf parquet tables and compares (rows, schema-by-name, values)
-with the Spark result parquet dumped by graft.Verify."""
+with the Spark result parquet dumped by graft.Verify.
+
+usage: check_oracle.py [sfDir] [outDir] [gate...]
+Trailing gate names check only those gates, as `graft.Verify` runs only the
+gates it is given; with none, every oracle in oracle_sql.json is checked."""
 import sys, json, glob
 import duckdb
 import pyarrow.parquet as pq
 
 sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
+only = set(sys.argv[3:])
 
 con = duckdb.connect()
 for t in ["region","nation","customer","supplier","part","orders","lineitem",
@@ -16,7 +21,11 @@ for t in ["region","nation","customer","supplier","part","orders","lineitem",
 
 oracles = json.load(open(f"{out}/oracle_sql.json"))
 ok = fail = 0
+for name in sorted(only - oracles.keys()):
+    print(f"{name}: NO ORACLE"); fail += 1
 for name, sql in sorted(oracles.items()):
+    if only and name not in only:
+        continue
     files = glob.glob(f"{out}/{name}/*.parquet")
     if not files:
         print(f"{name}: NO SPARK OUTPUT"); fail += 1; continue
@@ -48,7 +57,7 @@ for name, sql in sorted(oracles.items()):
 # rows-only queries
 for d in sorted(glob.glob(f"{out}/*/")):
     name = d.rstrip("/").split("/")[-1]
-    if name not in oracles and name != "oracle_sql.json":
+    if name not in oracles and name != "oracle_sql.json" and not only:
         n = pq.ParquetDataset(d).read().num_rows
         print(f"{name}: rows-only ({n} rows)")
 print(f"\n{ok} OK, {fail} FAIL")
