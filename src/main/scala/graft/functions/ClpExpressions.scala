@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
@@ -925,10 +925,15 @@ object ClpFunctions {
     "vec_qdot" -> (es => VecQDotExpr(es(0), es(1))),
     "vec_normalize" -> (es => VecNormalizeExpr(es.head)))
 
+  /** Registers every function the session's registry does not hold yet:
+    * a second call replaces nothing (each replacement logs a registry
+    * WARN), and a session built with [[graft.GraftExtensions]] keeps its
+    * injected functions. */
   def register(spark: SparkSession): Unit = {
     val r = spark.sessionState.functionRegistry
     builders.foreach { case (name, b) =>
-      r.createOrReplaceTempFunction(name, b, "built-in")
+      if (!r.functionExists(FunctionIdentifier(name)))
+        r.createOrReplaceTempFunction(name, b, "built-in")
     }
   }
 

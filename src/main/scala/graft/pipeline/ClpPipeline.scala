@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.ClpFunctions._
@@ -68,11 +68,11 @@ object ClpPipeline {
         * Full grid in BENCH/BASELINE.md. */
       parquetOptions: Map[String, String] = Map.empty)
 
-  final case class Result(
-      turnsIn: Long,
-      rowsRouted: Long,
-      nLogtypes: Long,
-      nVars: Long)
+  /** What a run wrote, each count taken on the write that produced it and
+    * kept in that stage's manifest: `turnsIn` the parsed rows (parse
+    * `input_rows`), `rowsRouted` the routed rows (route `rows_routed`),
+    * `nLogtypes`/`nVars` the dictionary rows (dicts `n_logtypes`/`n_vars`). */
+  final case class Result(turnsIn: Long, rowsRouted: Long, nLogtypes: Long, nVars: Long)
 
   /** Stage 1: one-pass tokenize+encode of every turn (heuristic or schema mode). */
   def parse(turns: DataFrame, schema: Option[graft.core.TokenizerSchema] = None): DataFrame = {
@@ -113,10 +113,19 @@ object ClpPipeline {
   /** Stage 5: fan-out write, by the one [[fanOutWrite]] rule: rows go to
     * (sink_id, hash(conv_id) % filesPerSink), so the hottest sink still
     * spreads over `filesPerSink` files, and rows inside each file keep the
-    * stable (conv_id, turn_idx) order. */
-  def route(encoded: DataFrame, cfg: Config): Unit =
-    fanOutWrite(encoded, "sink_id", "conv_id", cfg.filesPerSink,
-      Seq("sink_id", "conv_id", "turn_idx"), cfg.parquetOptions, s"${cfg.outDir}/routed")
+    * stable (conv_id, turn_idx) order. Returns the number of rows written. */
+  def route(encoded: DataFrame, cfg: Config): Long =
+    counted(encoded)(fanOutWrite(_, "sink_id", "conv_id", cfg.filesPerSink,
+      Seq("sink_id", "conv_id", "turn_idx"), cfg.parquetOptions, s"${cfg.outDir}/routed"))
+
+  /** Runs `write` over `rows` and returns how many rows it wrote, observed
+    * on the write itself: no extra job, no read-back. A plan the optimizer
+    * proves empty keeps no observing node and reports no count: zero rows. */
+  private def counted(rows: DataFrame)(write: DataFrame => Unit): Long = {
+    val obs = Observation()
+    write(rows.observe(obs, count(lit(1)).as("rows")))
+    obs.get.getOrElse("rows", 0L).asInstanceOf[Long]
+  }
 
   /** The one fan-out write of both pipelines (text sinks, JSON schemas):
     * partition directories by `key`, each spread over `files` buckets of
@@ -140,7 +149,12 @@ object ClpPipeline {
       .parquet(path)
   }
 
-  /** Full run with per-stage lineage manifests and exact resume.
+  /** Full run: four stages (parse, dicts, route, stats) under one stage
+    * rule. A stage that resume finds COMPLETE answers with the metrics its
+    * lineage manifest recorded; any other stage runs, and its manifest
+    * records the counts taken on its own writes, its `duration_ms` and its
+    * `completed_at_ms`. Every job belongs to one stage and nothing the run
+    * wrote is read back, so resuming a complete archive starts no job.
     *
     * The parsed form is a columnar parquet intermediate rather than a cached
     * Dataset: the dictionary builds then scan ONLY their own columns (logtype
@@ -152,85 +166,91 @@ object ClpPipeline {
     * (team, cost_class) table broadcast-joined onto every encoded row;
     * defaults to the synthetic transcript mapping. */
   def run(spark: SparkSession, turns: DataFrame, cfg: Config,
-          lookup: Option[DataFrame] = None): Result = {
-    // Spark's session default writes TIMESTAMP as parquet INT96 — 12 bytes
-    // per value of a non-standard type (measured: the ts column was 13.5 B/row
-    // raw, the single biggest routed column after vars). TIMESTAMP_MICROS is
-    // the standard type at Spark's OWN internal precision — always lossless —
-    // and 8 bytes before encoding. Set for the duration of the run, restored
-    // after (the archive owns its storage format; the caller's session conf
-    // is not ours to keep).
-    val tsTypeKey = "spark.sql.parquet.outputTimestampType"
-    val prevTsType = spark.conf.getOption(tsTypeKey)
-    spark.conf.set(tsTypeKey, "TIMESTAMP_MICROS")
-    try runInner(spark, turns, cfg, lookup)
-    finally prevTsType match {
-      case Some(v) => spark.conf.set(tsTypeKey, v)
-      case None => spark.conf.unset(tsTypeKey)
+          lookup: Option[DataFrame] = None): Result =
+    withArchiveTimestamps(spark)(runInner(spark, turns, cfg, lookup))
+
+  /** Runs `body` writing TIMESTAMP as the archive stores it, then restores
+    * the caller's session value. Spark's default, INT96, is 12 bytes of a
+    * non-standard type (the ts column measured 13.5 B/row raw, the biggest
+    * routed column after vars); TIMESTAMP_MICROS is standard, lossless at
+    * Spark's own precision, and 8 bytes before encoding. */
+  def withArchiveTimestamps[T](spark: SparkSession)(body: => T): T = {
+    val key = "spark.sql.parquet.outputTimestampType"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "TIMESTAMP_MICROS")
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
     }
   }
 
   private def runInner(spark: SparkSession, turns: DataFrame, cfg: Config,
                        lookup: Option[DataFrame]): Result = {
     val lineage = new Lineage(cfg.outDir)
+    def path(table: String) = s"${cfg.outDir}/$table"
+    def archiveWrite(table: String)(rows: DataFrame): Unit =
+      rows.write.mode("overwrite").options(cfg.parquetOptions).parquet(path(table))
 
-    if (!(cfg.resume && lineage.isComplete("parse"))) {
-      val t0 = System.nanoTime()
-      parse(turns, cfg.tokenizerSchema).write.mode("overwrite").parquet(s"${cfg.outDir}/parsed")
-      lineage.complete("parse",
-        Map("duration_ms" -> (System.nanoTime() - t0) / 1000000,
-          // recorded so a finished archive can drop the parsed checkpoint
-          // (it is a full second copy of the corpus) and still answer
-          // turnsIn on resume without any data read
-          "input_rows" -> spark.read.parquet(s"${cfg.outDir}/parsed").count()))
-    }
+    def stage(name: String)(body: => Map[String, Long]): Map[String, Long] =
+      if (cfg.resume && lineage.isComplete(name)) lineage.metrics(name)
+      else {
+        val t0 = System.nanoTime()
+        val metrics = body + ("duration_ms" -> (System.nanoTime() - t0) / 1000000)
+        lineage.complete(name, metrics)
+        metrics
+      }
+    // the one fallback: a manifest written before `key` was recorded answers
+    // it from the stage's output, once, and keeps it — so the parsed
+    // checkpoint can still be dropped and later resumes read nothing
+    def recorded(name: String, metrics: Map[String, Long], key: String)(output: => Long): Long =
+      metrics.getOrElse(key, {
+        val n = output
+        lineage.complete(name, lineage.metrics(name) + (key -> n))
+        n
+      })
+
     // lazy: a fully-complete resumed run never touches the parsed checkpoint
     // (which run() deletes at success unless cfg.keepParsed)
-    lazy val parsed = spark.read.parquet(s"${cfg.outDir}/parsed")
-    val turnsIn = lineage.metric("parse", "input_rows")
-      .getOrElse(parsed.count()) // metadata-only count on parquet
+    lazy val parsed = spark.read.parquet(path("parsed"))
+    val turnsIn = recorded("parse", stage("parse") {
+      Map("input_rows" -> counted(parse(turns, cfg.tokenizerSchema))(
+        _.write.mode("overwrite").parquet(path("parsed"))))
+    }, "input_rows")(parsed.count())
 
     // the mode the dicts stage picked in this call; in driver mode it holds
     // the encode maps built from the same collect, so route needs no re-read
-    val built: Option[Dictionaries.Mode] =
-      if (cfg.resume && lineage.isComplete("dicts")) None
-      else {
-        val t0 = System.nanoTime()
-        val dicts = Dictionaries.build(parsed, cfg.saltParts, cfg.maxSinks, cfg.driverDictThreshold)
-        dicts.logtypes.write.mode("overwrite").options(cfg.parquetOptions).parquet(s"${cfg.outDir}/logtype_dict")
-        dicts.vars.write.mode("overwrite").options(cfg.parquetOptions).parquet(s"${cfg.outDir}/var_dict")
-        dicts.release()
-        lineage.complete("dicts", Map("input_rows" -> turnsIn,
-          "duration_ms" -> (System.nanoTime() - t0) / 1000000))
-        Some(dicts.mode)
-      }
-    lazy val logtypeDict = spark.read.parquet(s"${cfg.outDir}/logtype_dict")
-    lazy val varDict = spark.read.parquet(s"${cfg.outDir}/var_dict")
+    var built: Option[Dictionaries.Mode] = None
+    val dicts = stage("dicts") {
+      val b = Dictionaries.build(parsed, cfg.saltParts, cfg.maxSinks, cfg.driverDictThreshold)
+      val nLogtypes = counted(b.logtypes)(archiveWrite("logtype_dict"))
+      val nVars = counted(b.vars)(archiveWrite("var_dict"))
+      b.release()
+      built = Some(b.mode)
+      Map("input_rows" -> turnsIn, "n_logtypes" -> nLogtypes, "n_vars" -> nVars)
+    }
+    lazy val logtypeDict = spark.read.parquet(path("logtype_dict"))
+    lazy val varDict = spark.read.parquet(path("var_dict"))
+    val nLogtypes = recorded("dicts", dicts, "n_logtypes")(logtypeDict.count())
+    val nVars = recorded("dicts", dicts, "n_vars")(varDict.count())
 
-    val routeDone = cfg.resume && lineage.isComplete("route")
-    if (!routeDone) {
-      val t0 = System.nanoTime()
+    val routedRows = recorded("route", stage("route") {
       val lkp = lookup.getOrElse(TranscriptGen.roleToolLookup(spark))
-      val resolved = built.getOrElse(
-          Dictionaries.mode(logtypeDict, varDict, cfg.driverDictThreshold)) match {
+      val resolved = built.getOrElse(Dictionaries.mode(logtypeDict, varDict,
+          nLogtypes + nVars, cfg.driverDictThreshold)) match {
         case maps: Dictionaries.DriverMaps => maps.resolve(parsed)
         case Dictionaries.Distributed =>
           Dictionaries.resolveDistributed(parsed, logtypeDict, varDict, cfg.hotHeadSize)
       }
-      route(resolved.transform(enrich(lkp)), cfg)
-      lineage.complete("route", Map("input_rows" -> turnsIn,
-        "duration_ms" -> (System.nanoTime() - t0) / 1000000))
-    }
+      Map("input_rows" -> turnsIn, "rows_routed" -> route(resolved.transform(enrich(lkp)), cfg))
+    }, "rows_routed")(spark.read.parquet(path("routed")).count())
 
-    val routed = spark.read.parquet(s"${cfg.outDir}/routed")
-    val statsDone = cfg.resume && lineage.isComplete("stats")
-    if (!statsDone) {
-      val t0 = System.nanoTime()
+    stage("stats") {
       // one scan for both granularities: aggregate at (sink_id, bucket) once
       // with MERGEABLE sketches, then roll the bucket rows (sink-count-sized)
       // up to the per-sink stats — unlike rollup(), whose Expand duplicates
       // every input row per grouping set, the data is scanned exactly once
-      val bucketed = routed
+      val bucketed = spark.read.parquet(path("routed"))
         .withColumn("bucket", pmod(xxhash64(col("conv_id")), lit(cfg.filesPerSink)))
         .groupBy(col("sink_id"), col("bucket"))
         .agg(count(lit(1)).as("n_rows"),
@@ -239,47 +259,30 @@ object ClpPipeline {
           sum(col("n_bytes")).as("n_bytes"),
           hll_sketch_agg(col("logtype_id")).as("_lt_sk"))
         .cache()
-      bucketed.groupBy(col("sink_id"))
+      archiveWrite("sink_stats")(bucketed.groupBy(col("sink_id"))
         .agg(sum(col("n_rows")).as("n_rows"),
           hll_sketch_estimate(hll_union_agg(col("_conv_sk"))).as("n_convs_approx"),
           min(col("min_ts")).as("min_ts"), max(col("max_ts")).as("max_ts"),
           sum(col("n_bytes")).as("n_bytes"),
           hll_sketch_estimate(hll_union_agg(col("_lt_sk"))).as("n_logtypes_approx"))
         .select("sink_id", "n_rows", "n_convs_approx", "min_ts", "max_ts",
-          "n_bytes", "n_logtypes_approx")
-        .write.mode("overwrite").options(cfg.parquetOptions).parquet(s"${cfg.outDir}/sink_stats")
-      bucketed.select("sink_id", "bucket", "n_rows", "n_bytes")
-        .write.mode("overwrite").options(cfg.parquetOptions).parquet(s"${cfg.outDir}/lineage_partitions")
+          "n_bytes", "n_logtypes_approx"))
+      archiveWrite("lineage_partitions")(bucketed.select("sink_id", "bucket", "n_rows", "n_bytes"))
       bucketed.unpersist()
-      lineage.complete("stats", Map("duration_ms" -> (System.nanoTime() - t0) / 1000000))
+      Map.empty
     }
 
     // every stage is durably complete past this point: drop the parsed
     // checkpoint (a full second copy of the corpus — at the 10^12-turn
     // target it would double archive storage). A failed run never reaches
     // here, so mid-run resume always still finds it; a resumed complete run
-    // answers turnsIn from the parse manifest instead. Archives written
-    // before input_rows was recorded get the metric backfilled FIRST —
-    // deleting their checkpoint without it would leave turnsIn unanswerable
-    // forever.
+    // answers turnsIn from the parse manifest instead.
     if (!cfg.keepParsed) {
-      if (lineage.metric("parse", "input_rows").isEmpty)
-        lineage.complete("parse",
-          lineage.metrics("parse") + ("input_rows" -> turnsIn))
-      val p = new org.apache.hadoop.fs.Path(s"${cfg.outDir}/parsed")
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      if (fs.exists(p)) fs.delete(p, true)
+      val p = new org.apache.hadoop.fs.Path(path("parsed"))
+      p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
     }
 
-    Result(
-      turnsIn = turnsIn,
-      // routed cardinality comes from the already-computed stats table (one
-      // tiny read) instead of re-listing + counting the routed tree; sum
-      // over an empty stats table is NULL → 0 (empty input corpus)
-      rowsRouted = Option(spark.read.parquet(s"${cfg.outDir}/sink_stats")
-        .agg(sum(col("n_rows"))).head.get(0)).map(_.asInstanceOf[Long]).getOrElse(0L),
-      nLogtypes = logtypeDict.count(),
-      nVars = varDict.count())
+    Result(turnsIn = turnsIn, rowsRouted = routedRows, nLogtypes = nLogtypes, nVars = nVars)
   }
 
   /**
@@ -296,8 +299,4 @@ object ClpPipeline {
       .filter(col("decoded") =!= col("text"))
       .select("conv_id", "turn_idx", "text", "decoded")
   }
-
-  /** Placeholder kind per variable position: 'i' int, 'f' float, 'd' dict. */
-  def placeholderKinds(logtype: String): Array[Char] =
-    graft.core.ClpEncoding.placeholderKinds(logtype)
 }

@@ -75,10 +75,11 @@ object Dictionaries {
     DriverMaps(spark.sparkContext.broadcast(lt), spark.sparkContext.broadcast(vm))
   }
 
-  /** The mode of an archive's written dictionaries; in driver mode the maps
-    * are collected from (value, id, sink) and (value, id) rows. */
-  def mode(logtypeDict: DataFrame, varDict: DataFrame, threshold: Long): Mode =
-    if (!driverMode(logtypeDict, varDict, threshold)) Distributed
+  /** The mode of an archive's written dictionaries, which hold `entries`
+    * entries together; in driver mode the maps are collected from
+    * (value, id, sink) and (value, id) rows. */
+  def mode(logtypeDict: DataFrame, varDict: DataFrame, entries: Long, threshold: Long): Mode =
+    if (!driverMode(entries, threshold)) Distributed
     else {
       val spark = logtypeDict.sparkSession
       import spark.implicits._

@@ -1,6 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -169,16 +171,34 @@ object JsonPipeline {
             options: Options = Options()): Result = {
     // log_event_idx: the reference's per-record sequential index
     // (archive_constants.hpp:31). An existing total-order column is the
-    // zero-cost path; otherwise zipWithIndex assigns contiguous input-order
-    // ids (one extra count job — still O(1) jobs).
+    // zero-cost path; otherwise ids are contiguous in input order: a row's
+    // monotonically_increasing_id holds its partition (upper 31 bits) and
+    // its position there (lower 33), and one per-partition count gives each
+    // partition its first id — still O(1) jobs, and the write stays a
+    // codegen'd plan over the input. The first ids join as a broadcast
+    // table, which also keeps the shaping in tasks for a driver-local input
+    // (a literal would let the optimizer shape it on the driver, where a
+    // refused record would not fail as a Spark job).
     val indexed = options.orderCol match {
       case Some(c) => jsonl.withColumn("log_event_idx", col(c).cast(LongType))
       case None =>
-        val base = jsonl
-        val rdd = base.rdd.zipWithIndex.map { case (r, ix) =>
-          org.apache.spark.sql.Row.fromSeq(r.toSeq :+ ix)
-        }
-        spark.createDataFrame(rdd, base.schema.add("log_event_idx", LongType))
+        val withId = jsonl.withColumn("_mid", monotonically_increasing_id())
+        val part = shiftright(col("_mid"), 33)
+        // one job, no shuffle: rows per partition, counted where they are
+        val long = Encoders.scalaLong
+        val sizes = withId.select(part).as(long).mapPartitions { ps =>
+          val n = scala.collection.mutable.LongMap.empty[Long]
+          ps.foreach(p => n(p) = n.getOrElse(p, 0L) + 1)
+          n.iterator
+        }(Encoders.tuple(long, long)).collect().groupMapReduce(_._1)(_._2)(_ + _).toSeq.sortBy(_._1)
+        // `_first` nullable: log_event_idx keeps the records schema's
+        // nullable type
+        val firsts = spark.createDataFrame(
+          sizes.map(_._1).zip(sizes.scanLeft(0L)(_ + _._2)).map { case (p, f) => Row(p, f) }.asJava,
+          StructType(Seq(StructField("_part", LongType), StructField("_first", LongType))))
+        withId.join(broadcast(firsts), part === col("_part"))
+          .withColumn("log_event_idx", col("_first") + col("_mid").bitwiseAND(lit((1L << 33) - 1)))
+          .drop("_mid", "_part", "_first")
     }
 
     // ONE shaping pass (the codegen'd json_shape) lands the records store

@@ -30,15 +30,11 @@ final class Lineage(outDir: String) {
       new String(Files.readAllBytes(path(stage)), StandardCharsets.UTF_8)
         .contains("\"COMPLETE\"")
 
-  /** A recorded metric from a stage manifest — lets later runs answer
-    * questions like "how many input rows?" without re-reading (or even
-    * keeping) the stage's data output. */
-  def metric(stage: String, key: String): Option[Long] =
-    metrics(stage).get(key)
-
   /** All numeric metrics recorded in a stage manifest (completed_at_ms
-    * excluded — [[complete]] re-stamps it). Lets a manifest be extended
-    * without discarding what an earlier run recorded. */
+    * excluded — [[complete]] re-stamps it): later runs answer counts like
+    * "how many input rows?" from them without re-reading (or even keeping)
+    * the stage's data output, and a manifest can be extended without
+    * discarding what an earlier run recorded. */
   def metrics(stage: String): Map[String, Long] =
     if (!Files.exists(path(stage))) Map.empty
     else {

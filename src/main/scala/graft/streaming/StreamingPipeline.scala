@@ -56,41 +56,42 @@ final class StreamingPipeline(spark: SparkSession, outDir: String,
   def processBatch(turns: DataFrame, batchId: Long): Unit = {
     val marker = new java.io.File(s"$outDir/_batches/$batchId")
     if (marker.exists()) return
-    // same archive storage type as the batch pipeline (ClpPipeline.run):
-    // standard 8-byte TIMESTAMP_MICROS, not 12-byte INT96 — and the appended
-    // batches stay homogeneous with a batch-built archive's files
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    val parsed = ClpPipeline.parse(turns)
-      // a batch is small: localCheckpoint would pin executors in streaming;
-      // just materialize via cache for the two passes below
-      .cache()
+    // same archive storage type as the batch pipeline: standard 8-byte
+    // TIMESTAMP_MICROS, not 12-byte INT96 — and the appended batches stay
+    // homogeneous with a batch-built archive's files
+    ClpPipeline.withArchiveTimestamps(spark) {
+      val parsed = ClpPipeline.parse(turns)
+        // a batch is small: localCheckpoint would pin executors in streaming;
+        // just materialize via cache for the two passes below
+        .cache()
 
-    // BOTH markers must exist: a first-batch crash between the var-dict
-    // commit and the logtype-dict write would otherwise replay with
-    // haveDicts=true and hydrate a nonexistent lt-dict path forever; a
-    // half-committed first batch instead recomputes and overwrite-heals both
-    val haveDicts = new java.io.File(s"$varDictPath/_SUCCESS").exists() &&
-      new java.io.File(s"$ltDictPath/_SUCCESS").exists()
-    // cheap cardinality gate BEFORE anything dict-sized is materialized —
-    // parquet row counts come from footers, no scan
-    val dictEntries: Long = dictState match {
-      case Some((v, l)) => v.size.toLong + l.size.toLong
-      case None if haveDicts =>
-        spark.read.parquet(varDictPath).count() +
-          spark.read.parquet(ltDictPath).count()
-      case None => 0L
+      // BOTH markers must exist: a first-batch crash between the var-dict
+      // commit and the logtype-dict write would otherwise replay with
+      // haveDicts=true and hydrate a nonexistent lt-dict path forever; a
+      // half-committed first batch instead recomputes and overwrite-heals both
+      val haveDicts = new java.io.File(s"$varDictPath/_SUCCESS").exists() &&
+        new java.io.File(s"$ltDictPath/_SUCCESS").exists()
+      // cheap cardinality gate BEFORE anything dict-sized is materialized —
+      // parquet row counts come from footers, no scan
+      val dictEntries: Long = dictState match {
+        case Some((v, l)) => v.size.toLong + l.size.toLong
+        case None if haveDicts =>
+          spark.read.parquet(varDictPath).count() +
+            spark.read.parquet(ltDictPath).count()
+        case None => 0L
+      }
+
+      val routed =
+        if (Dictionaries.driverMode(dictEntries, driverDictThreshold))
+          processDriverMode(parsed, haveDicts)
+        else { dictState = None; processDistributedMode(parsed, haveDicts) }
+
+      routed
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("append").partitionBy("sink_id").parquet(s"$outDir/routed")
+      parsed.unpersist()
+      marker.mkdirs()
     }
-
-    val routed =
-      if (Dictionaries.driverMode(dictEntries, driverDictThreshold))
-        processDriverMode(parsed, haveDicts)
-      else { dictState = None; processDistributedMode(parsed, haveDicts) }
-
-    routed
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("append").partitionBy("sink_id").parquet(s"$outDir/routed")
-    parsed.unpersist()
-    marker.mkdirs()
   }
 
   /** CLP's memory-resident-dict shape: driver maps + broadcast resolution;

@@ -119,12 +119,31 @@ class ClpPipelineSpec extends SparkSpecBase {
     java.nio.file.Files.write(manifest,
       """{"stage": "parse", "status": "COMPLETE", "duration_ms": 1}"""
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    // ...and before the dicts and route counts were: their manifests held
+    // only input_rows and duration_ms
+    for (stage <- Seq("dicts", "route"))
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$out2/_lineage/$stage.json"),
+        s"""{"stage": "$stage", "status": "COMPLETE", "input_rows": ${result.turnsIn}, "duration_ms": 1}"""
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     val res = ClpPipeline.run(spark, turns, cfg2.copy(resume = true, keepParsed = false))
     assert(!Files.exists(java.nio.file.Paths.get(s"$out2/parsed")))
     // turnsIn must survive the drop (from the backfilled manifest) on the
     // NEXT resume too — without the backfill this read would crash
     val res2 = ClpPipeline.run(spark, turns, cfg2.copy(resume = true, keepParsed = false))
     assert(res.turnsIn == result.turnsIn && res2.turnsIn == result.turnsIn)
+    assert(res == result && res2 == result)
+  }
+
+  test("a run is 19 Spark jobs; a resumed run over its archive starts none") {
+    result // force: the session and the cached corpus are warm
+    val out2 = Files.createTempDirectory("graft-pipe-jobs").toString
+    val (res, jobs) = jobsOf(ClpPipeline.run(spark, turns, cfg.copy(outDir = out2)))
+    assert(res == result)
+    // the four stages' own jobs: no count re-reads what a stage wrote
+    assert(jobs == 19, s"a driver-mode run started $jobs Spark jobs")
+    val (resumed, resumedJobs) = jobsOf(ClpPipeline.run(spark, turns, cfg.copy(outDir = out2, resume = true)))
+    assert(resumed == result)
+    assert(resumedJobs == 0, s"a resumed complete run started $resumedJobs Spark jobs")
   }
 
   test("enrichment join annotates every row that has a lookup match") {

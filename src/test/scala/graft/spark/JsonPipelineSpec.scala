@@ -160,7 +160,7 @@ class JsonPipelineSpec extends SparkSpecBase {
     assert(got.map(_.getString(1)).toSeq == originals)
   }
 
-  test("zipWithIndex fallback assigns contiguous input-order event indices") {
+  test("index fallback assigns contiguous input-order event indices") {
     val dir = Files.createTempDirectory("graft-jsonl-zip").toString
     val recs = Seq.tabulate(50)(i => s"""{"n":$i}""").toDF("json")
     JsonPipeline.route(spark, recs, "json", dir)
@@ -169,6 +169,20 @@ class JsonPipelineSpec extends SparkSpecBase {
     assert(idx == (0L until 50L))
     val back = new JsonSearch(spark, dir).extract().collect().map(_.getString(1)).toSeq
     assert(back == Seq.tabulate(50)(i => s"""{"n":$i}"""))
+  }
+
+  test("index fallback numbers a multi-partition input in input order") {
+    val src = Files.createTempDirectory("graft-jsonl-parts").toString
+    Seq.tabulate(300)(i => s"""{"n":$i}""").toDF("json").repartition(5)
+      .write.mode("overwrite").text(src)
+    val jsonl = spark.read.text(src).withColumnRenamed("value", "json")
+    assert(jsonl.rdd.getNumPartitions > 1)
+    // input order: partition by partition, rows in partition order
+    val inputOrder = jsonl.rdd.zipWithIndex.map { case (r, i) => (i, r.getString(0)) }.collect().toSeq
+    val dir = Files.createTempDirectory("graft-jsonl-parts-out").toString
+    JsonPipeline.route(spark, jsonl, "json", dir)
+    assert(spark.read.parquet(s"$dir/records").select("log_event_idx", "_raw")
+      .as[(Long, String)].collect().sortBy(_._1).toSeq == inputOrder)
   }
 
   test("route is O(1) Spark jobs at any schema count (1000 distinct schemas)") {

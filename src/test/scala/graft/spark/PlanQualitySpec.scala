@@ -161,6 +161,23 @@ class PlanQualitySpec extends SparkSpecBase {
     assert(plans.exists(_.contains("json_reserialize")), "no plan reserialized a record")
   }
 
+  test("the JSON records write without an order column plans over its input, not an RDD") {
+    import spark.implicits._
+    val src = java.nio.file.Files.createTempDirectory("graft-json-rdd-src").toString
+    Seq.tabulate(60)(i => s"""{"n":$i}""").toDF("json").repartition(3)
+      .write.mode("overwrite").text(src)
+    val out = java.nio.file.Files.createTempDirectory("graft-json-rdd").toString
+    val plans = assertNoUdfPlans("the JSON route") {
+      graft.pipeline.JsonPipeline.route(spark,
+        spark.read.text(src).withColumnRenamed("value", "json"), "json", out)
+    }
+    val writes = plans.filter(p =>
+      p.contains("InsertIntoHadoopFsRelationCommand") && p.contains(s"$out/records"))
+    assert(writes.nonEmpty, "no plan wrote the records")
+    writes.foreach(p => assert(!p.contains("LogicalRDD") && !p.contains("ExistingRDD"),
+      s"the records write scans an RDD:\n$p"))
+  }
+
   test("curation gates: broadcasts where intended, no cartesian blowups") {
     // unigram LM: the one-row corpus total rides a broadcast, never a
     // shuffle; the vocab join may be broadcast or shuffle (AQE by size)

@@ -2,9 +2,12 @@ package graft.spark
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
+import graft.core.ClpEncoding
 import graft.pipeline.{ClpPipeline, Dictionaries, TranscriptGen, Turn}
 import graft.streaming.StreamingPipeline
 
@@ -45,11 +48,11 @@ class StreamingPipelineSpec extends SparkSpecBase {
     val inv: Map[Long, String] = vd2
     val bcInv = spark.sparkContext.broadcast(inv)
     val dictValsOf = udf((logtype: String, vars: Seq[Long]) => {
-      ClpPipeline.placeholderKinds(logtype).iterator.zip(vars.iterator)
+      ClpEncoding.placeholderKinds(logtype).iterator.zip(vars.iterator)
         .collect { case ('d', v) => bcInv.value(v) }.toSeq
     })
     val encValsOf = udf((logtype: String, vars: Seq[Long]) => {
-      ClpPipeline.placeholderKinds(logtype).iterator.zip(vars.iterator)
+      ClpEncoding.placeholderKinds(logtype).iterator.zip(vars.iterator)
         .collect { case (k, v) if k != 'd' => v }.toSeq
     })
     val decoded = routed.join(broadcast(lts), Seq("logtype_id"))
@@ -74,6 +77,31 @@ class StreamingPipelineSpec extends SparkSpecBase {
     // a NEW id still appends
     engine.processBatch(batch, 1L)
     assert(spark.read.parquet(s"$outDir/routed").count() == 2 * n1)
+  }
+
+  test("processBatch leaves the caller's parquet timestamp type as it found it") {
+    val key = "spark.sql.parquet.outputTimestampType"
+    val before = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "INT96")
+      val outDir = Files.createTempDirectory("graft-stream-tstype").toString
+      new StreamingPipeline(spark, outDir)
+        .processBatch((0L until 10L).map(c => TranscriptGen.turnAt(c, 0, seed = 3L)).toDF, 0L)
+      assert(spark.conf.get(key) == "INT96")
+      // while the batch itself wrote the archive's 8-byte type
+      val part = Files.walk(java.nio.file.Paths.get(s"$outDir/routed")).iterator().asScala
+        .find(_.toString.endsWith(".parquet")).get
+      val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(part.toUri), spark.sessionState.newHadoopConf()))
+      try assert(footer.getFileMetaData.getSchema.getColumnDescription(Array("ts")).getPrimitiveType
+        .getPrimitiveTypeName ==
+        org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64)
+      finally footer.close()
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   test("distributed dict mode (threshold=0): delta appends, batch-identical dicts, byte-exact decode") {
@@ -111,11 +139,11 @@ class StreamingPipelineSpec extends SparkSpecBase {
     val inv = vd.map { case (id, v) => id -> v }.toMap
     val bcInv = spark.sparkContext.broadcast(inv)
     val dictValsOf = udf((logtype: String, vars: Seq[Long]) => {
-      ClpPipeline.placeholderKinds(logtype).iterator.zip(vars.iterator)
+      ClpEncoding.placeholderKinds(logtype).iterator.zip(vars.iterator)
         .collect { case ('d', v) => bcInv.value(v) }.toSeq
     })
     val encValsOf = udf((logtype: String, vars: Seq[Long]) => {
-      ClpPipeline.placeholderKinds(logtype).iterator.zip(vars.iterator)
+      ClpEncoding.placeholderKinds(logtype).iterator.zip(vars.iterator)
         .collect { case (k, v) if k != 'd' => v }.toSeq
     })
     val decoded = routed.join(broadcast(lts.select("logtype_id", "logtype")), Seq("logtype_id"))
@@ -165,11 +193,11 @@ class StreamingPipelineSpec extends SparkSpecBase {
     val inv = spark.read.parquet(s"$outDir/var_dict").as[(Long, String)].collect().toMap
     val bcInv = spark.sparkContext.broadcast(inv)
     val dictValsOf = udf((logtype: String, vars: Seq[Long]) => {
-      ClpPipeline.placeholderKinds(logtype).iterator.zip(vars.iterator)
+      ClpEncoding.placeholderKinds(logtype).iterator.zip(vars.iterator)
         .collect { case ('d', v) => bcInv.value(v) }.toSeq
     })
     val encValsOf = udf((logtype: String, vars: Seq[Long]) => {
-      ClpPipeline.placeholderKinds(logtype).iterator.zip(vars.iterator)
+      ClpEncoding.placeholderKinds(logtype).iterator.zip(vars.iterator)
         .collect { case (k, v) if k != 'd' => v }.toSeq
     })
     val decoded = routed.join(broadcast(lts), Seq("logtype_id"))
